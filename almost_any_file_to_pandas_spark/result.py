@@ -7,9 +7,16 @@ validating descriptors (RulePath/RuleString/RuleData), defaults
 ``'Failed'`` iff the DataFrame is empty (main.py:99-103).
 
 Spark redesign: the payload is a *lazy* ``pyspark.sql.DataFrame``; we
-do not force a count at construction. ``parse_info`` is therefore a
-lazy property — first access runs ``isEmpty()`` (a cheap limit-1 job),
-then caches. The reference's eager "shape in __str__" (main.py:110-111)
+do not force a count at construction. The reference gets its status
+for free because its frame is already in memory; here a Spark check
+would re-run the whole source. So each reader decides ``parse_info``
+at ``parse()`` time from evidence it already holds on the driver —
+rowid bounds, a probed record, block row counts, a pre-scanned width,
+a driver-side grid or pandas frame — via :meth:`ParseResult.mark_rows`
+or :meth:`ParseResult.mark_failed`. Readers without such evidence (the
+Spark-native text/CSV/JSON/parquet/ORC scans) and the PDF arm leave it
+unset; first access then runs ``isEmpty()`` (a limit-1 job) and
+caches. The reference's eager "shape in __str__" (main.py:110-111)
 becomes optional via :meth:`describe`.
 """
 
@@ -65,7 +72,11 @@ class ParseResult:
 
     @property
     def parse_info(self) -> str:
-        """'Failed' iff the table is empty (main.py:103), lazily."""
+        """'Failed' iff the table is empty (main.py:103).
+
+        Set by the reader from driver-side evidence where it has some
+        (no Spark job); otherwise the first access runs a lazy
+        ``isEmpty()`` and caches the answer."""
         if self._parse_info is None:
             self._parse_info = (
                 STATUS_FAILED if self.data.isEmpty() else STATUS_SUCCESS
@@ -76,6 +87,13 @@ class ParseResult:
         """Pre-set Failed without running a Spark job (used by the
         façade's error paths, main.py:134-144)."""
         self._parse_info = STATUS_FAILED
+        return self
+
+    def mark_rows(self, has_rows: bool) -> "ParseResult":
+        """Pre-set the status from a reader's own evidence of whether
+        ``data`` holds a row, so reading ``parse_info`` starts no Spark
+        job. The evidence must agree with ``data.isEmpty()``."""
+        self._parse_info = STATUS_SUCCESS if has_rows else STATUS_FAILED
         return self
 
     @property

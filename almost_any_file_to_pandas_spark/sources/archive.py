@@ -136,9 +136,9 @@ def read_zip(
                 continue
             _register_temp_file(tmp.name)
             for r in parse(spark, tmp.name, **options):
-                # evaluates the lazy status (a limit-1 job) — archive
-                # members are enumerated at container granularity, so
-                # the per-member probe is part of the fan-out cost
+                # reads each member's status: free where the reader set
+                # it, a limit-1 job for the lazy text/JSON arms — part of
+                # the fan-out cost at container granularity
                 if r.parse_info == "Failed":
                     continue  # member-level failure: skip, continue
                 r.file_path = str(p.absolute())

@@ -464,15 +464,17 @@ def decode_avro_block(
 def read_avro(spark: SparkSession, path, **options):
     """Distributed Avro OCF scan wrapped in the façade's
     :class:`ParseResult` contract: driver indexes block boundaries,
-    executors decode their blocks independently."""
+    executors decode their blocks independently. The index's row
+    counts are the status, so ``parse_info`` needs no Spark job."""
     from almost_any_file_to_pandas_spark.result import ParseResult
 
+    df, n_rows = _scan_avro(spark, path)
     return ParseResult(
-        data=read_avro_frame(spark, path, **options),
+        data=df,
         sheet_name="Avro container content",
         engine="stdlib avro (block-parallel)",
         file_path=str(path),
-    )
+    ).mark_rows(n_rows > 0)
 
 
 def read_avro_frame(spark: SparkSession, path, **options) -> DataFrame:
@@ -485,6 +487,11 @@ def read_avro_frame(spark: SparkSession, path, **options) -> DataFrame:
     executor can reach (shared FS / object store) — true on local
     mode trivially, and the standing deployment assumption at scale.
     """
+    return _scan_avro(spark, path)[0]
+
+
+def _scan_avro(spark: SparkSession, path) -> Tuple[DataFrame, int]:
+    """(block-parallel scan, total row count from the block index)."""
     p = str(path)
     import os as _os
 
@@ -499,8 +506,9 @@ def read_avro_frame(spark: SparkSession, path, **options) -> DataFrame:
         blocks = index_avro_blocks_stream(
             fh, sync, _os.fstat(fh.fileno()).st_size
         )
+    n_rows = sum(count for count, _off, _size in blocks)
     if not blocks:
-        return spark.createDataFrame([], ddl)
+        return spark.createDataFrame([], ddl), n_rows
     sc = spark.sparkContext
     n_slices = min(len(blocks), sc.defaultParallelism)
 
@@ -513,7 +521,7 @@ def read_avro_frame(spark: SparkSession, path, **options) -> DataFrame:
         return decode_avro_block(payload, codec, decoders, count)
 
     rdd = sc.parallelize(blocks, n_slices).flatMap(decode_range)
-    return spark.createDataFrame(rdd, ddl)
+    return spark.createDataFrame(rdd, ddl), n_rows
 
 
 def synth_avro(

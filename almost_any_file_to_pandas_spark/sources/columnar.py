@@ -19,7 +19,9 @@ driver-side probe to distinguish array-of-records (Spark multiLine
 handles it) from columnar ``{"col": {"0": v, ...}}`` (no Spark
 analogue → driver-side pandas bridge) from JSON-lines (Spark default).
 Pickle is inherently a single Python blob → driver-side bridge via
-``spark.createDataFrame`` (Arrow path).
+``spark.createDataFrame`` (Arrow path). The driver-side arms know
+their row count, so they set ``parse_info`` themselves; the Spark
+scans leave it to the lazy ``isEmpty()``.
 """
 
 from __future__ import annotations
@@ -113,6 +115,7 @@ def read_json(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
     """
     path = str(path)
     shape = _probe_json_shape(path)
+    pdf = None
     if shape in ("records",):
         df = spark.read.option("multiLine", "true").json(path)
         engine = "spark.read.json(multiLine)"
@@ -149,12 +152,15 @@ def read_json(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
             pdf = pd.read_json(path)
             engine = "pandas.read_json -> createDataFrame"
         df = spark.createDataFrame(pdf)
-    return ParseResult(
+    result = ParseResult(
         data=df,
         sheet_name="JSON file content",  # main.py:434
         engine=engine,
         file_path=path,
     )
+    # the pandas arms hold the frame on the driver; the Spark scans
+    # keep the lazy isEmpty() status
+    return result if pdf is None else result.mark_rows(len(pdf) > 0)
 
 
 def _int_like(s: str) -> bool:
@@ -183,7 +189,7 @@ def read_pickle(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
         sheet_name="Pickle file content",  # deviation: main.py:447 says "JSON"
         engine="pandas.read_pickle -> createDataFrame",
         file_path=str(path),
-    )
+    ).mark_rows(len(pdf) > 0)
 
 
 def read_orc(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
@@ -236,4 +242,4 @@ def read_feather(spark: SparkSession, path: Union[str, Path]) -> ParseResult:
         sheet_name="Feather file content",
         engine=engine,
         file_path=path,
-    )
+    ).mark_rows(tbl.num_rows > 0)

@@ -7,10 +7,14 @@ format: one file, one table).
 Distributed by construction: DBF records are FIXED WIDTH, so the
 driver reads only the 32-byte header + field descriptors and every
 task locates its records by pure offset arithmetic
-(``header_size + i·record_size``) — the same rowid-range pattern as
-the SQLite arm, with zero per-task catalog work. Deleted records
-(``*`` flag) are skipped per spec. Shared-filesystem requirement as
-with the other by-path arms.
+(``header_size + i·record_size``) — one task per record range
+(``rangescan.scan_specs`` over ``spark.range``, no shuffle), the same
+pattern as the SQLite arm, with zero per-task catalog work. Deleted
+records (``*`` flag) are skipped per spec. The driver also probes from
+the first record to the first complete live one — usually a single
+record — and that probe is the result's status, so ``parse_info``
+needs no Spark job. Shared-filesystem requirement as with the other
+by-path arms.
 
 Typing per field descriptor: C→string (right-trimmed), N/F with 0
 decimals→bigint, N/F with decimals→double, L→boolean (T/t/Y/y true,
@@ -25,14 +29,16 @@ import struct
 from pathlib import Path
 from typing import Iterator, List, Tuple, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources.rangescan import (
+    scan_specs,
+    split_range,
+)
 
 _DBF_VERSIONS = {0x02, 0x03, 0x04, 0x05, 0x30, 0x31, 0x83, 0x8B}
-
-_MAX_RANGES = 64
 
 
 class _Field:
@@ -119,6 +125,31 @@ def _convert(raw: bytes, f: _Field):
     return raw.decode("ascii", "replace").rstrip()
 
 
+def _has_live_record(
+    path: str, header_size: int, record_size: int, n_records: int
+) -> bool:
+    """True iff the record scan yields a row: some record among the
+    first ``n_records`` is complete and not flagged deleted. Reads from
+    ``header_size`` up to the first such record — usually one — in
+    bounded chunks, so an all-deleted table costs one sequential pass
+    and a header that claims more records than the file holds stops at
+    end of file."""
+    per_chunk = max(1, (1 << 16) // record_size)
+    with open(path, "rb") as fh:
+        fh.seek(header_size)
+        left = n_records
+        while left > 0:
+            want = min(left, per_chunk) * record_size
+            chunk = fh.read(want)
+            for off in range(0, len(chunk) - record_size + 1, record_size):
+                if chunk[off : off + 1] != b"*":
+                    return True
+            if len(chunk) < want:
+                return False
+            left -= per_chunk
+    return False
+
+
 def read_dbf(
     spark: SparkSession, path: Union[str, Path], **options
 ) -> List[ParseResult]:
@@ -146,55 +177,47 @@ def read_dbf(
         [T.StructField(f.name, _spark_type(f), True) for f in fields]
     )
     abspath = str(p.absolute())
-    parallelism = spark.sparkContext.defaultParallelism
-    n_ranges = max(1, min(_MAX_RANGES, parallelism, n_records or 1))
-    width = (n_records + n_ranges - 1) // n_ranges if n_records else 1
-    ranges = [
-        (i * width, min(n_records, (i + 1) * width))
-        for i in range(n_ranges)
-        if i * width < n_records
-    ] or [(0, 0)]
+    try:
+        has_rows = _has_live_record(
+            abspath, header_size, record_size, n_records
+        )
+    except OSError:
+        return _failed(spark, str(path))
+    ranges = split_range(spark, 0, n_records)
     field_specs = [
         (f.name, f.ftype, f.length, f.decimals, f.offset)
         for f in fields
     ]
     out_names = [f.name for f in fields]
 
-    def scan(batches: Iterator) -> Iterator:
+    def scan(record_range: Tuple[int, int]) -> Iterator:
         import pandas as pd
 
+        lo, hi = record_range
         specs = [_Field(*s) for s in field_specs]
-        for pdf in batches:
-            for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                rows = []
-                with open(abspath, "rb") as fh:
-                    fh.seek(header_size + int(lo) * record_size)
-                    for _ in range(int(hi) - int(lo)):
-                        rec = fh.read(record_size)
-                        if len(rec) < record_size:
-                            break
-                        if rec[0:1] == b"*":  # deleted record
-                            continue
-                        rows.append(
-                            tuple(
-                                _convert(
-                                    rec[f.offset : f.offset + f.length],
-                                    f,
-                                )
-                                for f in specs
-                            )
-                        )
-                yield pd.DataFrame(rows, columns=out_names)
+        rows = []
+        with open(abspath, "rb") as fh:
+            fh.seek(header_size + lo * record_size)
+            for _ in range(hi - lo):
+                rec = fh.read(record_size)
+                if len(rec) < record_size:
+                    break
+                if rec[0:1] == b"*":  # deleted record
+                    continue
+                rows.append(
+                    tuple(
+                        _convert(rec[f.offset : f.offset + f.length], f)
+                        for f in specs
+                    )
+                )
+        yield pd.DataFrame(rows, columns=out_names)
 
-    range_df = spark.createDataFrame(
-        ranges, "lo long, hi long"
-    ).repartition(len(ranges))
-    df = range_df.mapInPandas(scan, schema)
+    df = scan_specs(spark, ranges, scan, schema)
     return [
         ParseResult(
             data=df,
             sheet_name="DBF table content",
             engine="dbf (stdlib, fixed-width record-range parallel)",
             file_path=abspath,
-        )
+        ).mark_rows(has_rows)
     ]

@@ -8,7 +8,9 @@ single failed answer (main.py:251-253).
 Spark design: the driver enumerates sheets and pre-scans each sheet's
 width (the Excel analogue of the text pipeline's max-columns pre-scan
 D3, main.py:360-368 — needed because a DataFrame schema is fixed
-before read). Row data is then read *executor-side* through a Spark 4
+before read). The width is also the result's status: ``width > 0``
+means a row exists, so ``parse_info`` needs no Spark job. Row data is
+then read *executor-side* through a Spark 4
 Python DataSource (`excel_core.ExcelDataSource`), one partition per
 worksheet part: the parse runs where the data will be consumed, and
 reading many workbooks in one job parallelizes across files. The
@@ -98,7 +100,7 @@ def read_excel(
                     sheet_name=name,
                     file_path=str(p),
                     engine="pandas",
-                )
+                ).mark_rows(len(frame) > 0)
             )
         return out or _failed(spark, str(p), engine="pandas")
 
@@ -132,13 +134,14 @@ def read_excel(
             .option("width", str(width))
             .load()
         )
+        # width > 0: the pre-scan saw a cell, so the sheet has a row
         results.append(
             ParseResult(
                 data=df,
                 sheet_name=sheet_name,
                 file_path=str(p),
                 engine=f"{fmt} datasource",
-            )
+            ).mark_rows(True)
         )
     return results
 

@@ -14,11 +14,11 @@ Spark design: like SpreadsheetML (xmlss.py), a single HTML document
 is not splittable, so structure discovery runs driver-side on the
 stdlib ``html.parser`` — which is error-tolerant BY DESIGN (no
 exception on malformed markup; whatever tables complete are kept, a
-built-in salvage pass). Each table becomes a DataFrame via
-``createDataFrame`` over the padded grid; at corpus scale the unit
-of parallelism is many files (``read_html_many``, executor-side via
-mapInPandas over the file list — the ``read_spreadsheetml_many``
-shape).
+built-in salvage pass). Each non-empty table becomes a DataFrame via
+``createDataFrame`` over the padded grid, its status known on the
+driver (no Spark job for ``parse_info``); at corpus scale the unit
+of parallelism is many files (``read_html_many``, executor-side, one
+task per group of files — the ``read_spreadsheetml_many`` shape).
 """
 
 from __future__ import annotations
@@ -31,6 +31,10 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources.rangescan import (
+    file_groups,
+    scan_specs,
+)
 
 _SKIP_TAGS = ("script", "style")
 _VOID_ROW_TAGS = ("thead", "tbody", "tfoot")  # structural, transparent
@@ -217,7 +221,7 @@ def read_html(
             encoding=encoding,
             file_path=str(p),
             engine="html",
-        )
+        ).mark_rows(True)  # extract_tables keeps only non-empty grids
         for i, grid in enumerate(grids)
     ] or _failed(spark, str(p))
 
@@ -225,53 +229,45 @@ def read_html(
 def read_html_many(spark: SparkSession, paths):
     """Corpus-scale HTML ingestion: many files → one DataFrame of
     ragged rows (source_file, table_idx, row_idx, cells), parsed
-    executor-side via mapInPandas over the file list — parallelism
-    scales with file count; unparseable files contribute zero rows."""
-    import glob as _glob
+    executor-side, one task per group of files — parallelism scales
+    with file count; unparseable files contribute zero rows."""
 
-    if isinstance(paths, (str, Path)):
-        expanded = sorted(_glob.glob(str(paths))) or [str(paths)]
-    else:
-        expanded = [str(p) for p in paths]
-
-    def _parse_files(batches):
+    def _parse_files(group):
         import pandas as pd
 
         from almost_any_file_to_pandas_spark.sources.htmltab import (
             extract_tables as _extract,
         )
 
-        for batch in batches:
-            out = {"source_file": [], "table_idx": [], "row_idx": [],
-                   "cells": []}
-            for path in batch["path"]:
+        out = {"source_file": [], "table_idx": [], "row_idx": [],
+               "cells": []}
+        for path in group:
+            try:
+                raw = Path(path).read_bytes()
                 try:
-                    raw = Path(path).read_bytes()
-                    try:
-                        text = raw.decode("utf-8")
-                    except UnicodeDecodeError:
-                        text = raw.decode("latin-1")
-                    grids = _extract(text)
-                except OSError:
-                    continue
-                for t_idx, grid in enumerate(grids):
-                    for r_idx, row in enumerate(grid):
-                        out["source_file"].append(path)
-                        out["table_idx"].append(t_idx)
-                        out["row_idx"].append(r_idx)
-                        out["cells"].append(row)
-            # an all-empty dict-of-lists frame infers float64 columns,
-            # which Arrow cannot cast to list<string> — a partition
-            # holding only table-less/unreadable files yields nothing
-            if out["source_file"]:
-                yield pd.DataFrame(out)
+                    text = raw.decode("utf-8")
+                except UnicodeDecodeError:
+                    text = raw.decode("latin-1")
+                grids = _extract(text)
+            except OSError:
+                continue
+            for t_idx, grid in enumerate(grids):
+                for r_idx, row in enumerate(grid):
+                    out["source_file"].append(path)
+                    out["table_idx"].append(t_idx)
+                    out["row_idx"].append(r_idx)
+                    out["cells"].append(row)
+        # an all-empty dict-of-lists frame infers float64 columns,
+        # which Arrow cannot cast to list<string> — a task holding
+        # only table-less/unreadable files yields nothing
+        if out["source_file"]:
+            yield pd.DataFrame(out)
 
-    files = spark.createDataFrame(
-        [(p,) for p in expanded], "path string"
-    ).repartition(min(len(expanded), spark.sparkContext.defaultParallelism))
-    return files.mapInPandas(
+    return scan_specs(
+        spark,
+        file_groups(spark, paths),
         _parse_files,
-        schema=(
+        (
             "source_file string, table_idx int, row_idx int,"
             " cells array<string>"
         ),

@@ -18,15 +18,17 @@ rank > 2 are refused (→ failed answer) rather than silently
 flattened.
 
 Scale: single-blob driver-side format by construction (one
-memory-mapped read → Arrow-batched ``createDataFrame``); the lake
-path for big embedding matrices is parquet with an ``array<float>``
-column, which the similarity operators already consume.
+memory-mapped read → Arrow-batched ``createDataFrame``, whose row
+count is the result's status — no Spark job for ``parse_info``); the
+lake path for big embedding matrices is parquet with an
+``array<float>`` column, which the similarity operators already
+consume.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
-from typing import List, Optional, Union
+from typing import List, Optional, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,7 +37,10 @@ from almost_any_file_to_pandas_spark.result import ParseResult
 NPY_MAX_COLUMNS = 4096  # a wider matrix is data modeling gone wrong
 
 
-def _frame_from_array(spark: SparkSession, arr) -> Optional[DataFrame]:
+def _frame_from_array(
+    spark: SparkSession, arr
+) -> Optional[Tuple[DataFrame, int]]:
+    """(frame, row count) for a supported array, None otherwise."""
     import numpy as np
     import pandas as pd
 
@@ -82,7 +87,7 @@ def _frame_from_array(spark: SparkSession, arr) -> Optional[DataFrame]:
         return None
     pdf = pd.DataFrame(data)
     pdf.insert(0, "row_id", range(len(pdf)))
-    return spark.createDataFrame(pdf)
+    return spark.createDataFrame(pdf), len(pdf)
 
 
 def read_npy(
@@ -97,16 +102,17 @@ def read_npy(
         arr = np.load(p, allow_pickle=False, mmap_mode="r")
     except (OSError, ValueError):
         return _failed(spark, p)
-    df = _frame_from_array(spark, np.asarray(arr))
-    if df is None:
+    frame = _frame_from_array(spark, np.asarray(arr))
+    if frame is None:
         return _failed(spark, p)
+    df, n_rows = frame
     return [
         ParseResult(
             data=df,
             sheet_name="NumPy array content",
             engine="numpy.load -> createDataFrame",
             file_path=p,
-        )
+        ).mark_rows(n_rows > 0)
     ]
 
 
@@ -129,16 +135,17 @@ def read_npz(
                 arr = bundle[name]
             except (OSError, ValueError):
                 continue  # bad member: skip, keep the rest
-            df = _frame_from_array(spark, arr)
-            if df is None:
+            frame = _frame_from_array(spark, arr)
+            if frame is None:
                 continue
+            df, n_rows = frame
             results.append(
                 ParseResult(
                     data=df,
                     sheet_name=name,
                     engine="numpy.load(npz) -> createDataFrame",
                     file_path=p,
-                )
+                ).mark_rows(n_rows > 0)
             )
     if not results:
         return _failed(spark, p)

@@ -95,6 +95,17 @@ def detect_encoding(
         detected = best.encoding if best is not None else None
     except Exception:
         return None
+    # Pure 7-bit text is ASCII whatever the statistics say: on short
+    # repetitive lines (the '~~@~~' .ant rows) the detector can name
+    # shift_jis_2004, a charset Spark's reader rejects. ESC marks the
+    # 7-bit ISO-2022 encodings, which keep the detector's answer.
+    if (
+        detected not in (None, "ascii", "utf_8")
+        and data.isascii()
+        and b"\x00" not in data
+        and b"\x1b" not in data
+    ):
+        return "ascii"
     # NUL bytes never occur in legitimate single-byte text, but decode
     # as valid UTF-8 control chars — a BOM-less UTF-16/32 file can
     # fool the statistical detector into "utf_8"/"ascii". Reclassify
@@ -139,6 +150,10 @@ def sniff_delimiter(
     data = prefix if prefix is not None else read_prefix(path)
     text = _decode(data, encoding)
     lines = [ln for ln in text.splitlines() if ln]
+    if len(lines) > 1 and not text.endswith(("\n", "\r")):
+        # a prefix cut inside a line ends in a fragment, which may hold
+        # no delimiter at all: never sample it when whole lines exist
+        lines.pop()
     if not lines:
         return FALLBACK_DELIMITER
 

@@ -13,19 +13,23 @@ Spark design — distributed ROWID-RANGE scan, not a driver slurp:
 * the driver opens the file READ-ONLY (``mode=ro&immutable=1`` URI)
   and reads only catalog metadata: ``sqlite_master`` table names,
   ``PRAGMA table_info`` column declarations, and per-table
-  ``MIN(rowid)/MAX(rowid)`` bounds — O(tables), never row data;
-* each table scan is ``mapInPandas`` over a small frame of rowid
-  ranges (one range per task): every task opens the SQLite file
-  itself and pulls only ``WHERE rowid BETWEEN lo AND hi``. SQLite's
-  rowid is the clustered btree key, so a range probe is a contiguous
-  btree walk, not a table scan per task. Like the Avro/driver-side
-  arms, executors re-open the path by name — a shared filesystem is
-  required (document'd contract, sources/avro.py has the same one);
+  ``MIN(rowid)/MAX(rowid)`` bounds — O(tables), never row data. The
+  bounds double as the result's status: ``lo <= hi`` proves a row, so
+  ``parse_info`` needs no Spark job;
+* each table scan is one task per rowid range
+  (``rangescan.scan_specs`` over ``spark.range``, no shuffle): every
+  task opens the SQLite file itself and pulls only
+  ``WHERE rowid >= lo AND rowid < hi``. SQLite's rowid is the clustered
+  btree key, so a range probe is a contiguous btree walk, not a table
+  scan per task. Like the Avro/driver-side arms, executors re-open the
+  path by name — a shared filesystem is required (document'd contract,
+  sources/avro.py has the same one);
 * ``WITHOUT ROWID`` tables have no rowid to range over — those fall
-  back to a single-task scan (flagged in ``engine``), which is the
-  honest shape: SQLite files are single-writer local artifacts, and
-  a WITHOUT ROWID table large enough to need parallel scan should be
-  exported to a splittable format first.
+  back to a single driver-side read (flagged in ``engine``; its row
+  count is the status), which is the honest shape: SQLite files are
+  single-writer local artifacts, and a WITHOUT ROWID table large
+  enough to need parallel scan should be exported to a splittable
+  format first.
 
 Typing: SQLite columns are dynamically typed; we map each column's
 DECLARED affinity (sqlite.org/datatype3.html §3.1 rules) to a Spark
@@ -45,15 +49,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources.rangescan import (
+    scan_specs,
+    split_range,
+)
 
 SQLITE_MAGIC = b"SQLite format 3\x00"
 
 SQLITE_SUFFIXES = (".db", ".sqlite", ".sqlite3")
-
-# Upper bound on ranges per table: enough tasks to keep a cluster
-# busy without issuing thousands of btree probes against one small
-# file. At local[32] this is one range per core.
-_MAX_RANGES = 64
 
 
 def _affinity_type(decl: Optional[str]) -> T.DataType:
@@ -147,14 +150,7 @@ def _scan_ranged(
     bounds: Tuple[int, int],
 ) -> DataFrame:
     lo, hi = bounds
-    parallelism = spark.sparkContext.defaultParallelism
-    n_ranges = max(1, min(_MAX_RANGES, parallelism, hi - lo + 1))
-    width = (hi - lo + 1 + n_ranges - 1) // n_ranges
-    ranges = [
-        (lo + i * width, min(hi, lo + (i + 1) * width - 1))
-        for i in range(n_ranges)
-        if lo + i * width <= hi
-    ]
+    ranges = split_range(spark, lo, hi + 1)
     qt = tbl.replace('"', '""')
     select_cols = ", ".join(
         '"' + c.replace('"', '""') + '"' for c in src_names
@@ -162,32 +158,25 @@ def _scan_ranged(
     out_names = [f.name for f in schema.fields]
     dtypes = [f.dataType for f in schema.fields]
 
-    def scan(batches: Iterator) -> Iterator:
+    def scan(rowid_range: Tuple[int, int]) -> Iterator:
         import pandas as pd
 
-        for pdf in batches:
-            for r_lo, r_hi in zip(pdf["lo"], pdf["hi"]):
-                con = _connect_ro(path)
-                try:
-                    rows = con.execute(
-                        f'SELECT {select_cols} FROM "{qt}"'
-                        " WHERE rowid BETWEEN ? AND ?",
-                        (int(r_lo), int(r_hi)),
-                    ).fetchall()
-                finally:
-                    con.close()
-                data = {
-                    name: [_coerce(row[i], dt) for row in rows]
-                    for i, (name, dt) in enumerate(
-                        zip(out_names, dtypes)
-                    )
-                }
-                yield pd.DataFrame(data, columns=out_names)
+        con = _connect_ro(path)
+        try:
+            rows = con.execute(
+                f'SELECT {select_cols} FROM "{qt}"'
+                " WHERE rowid >= ? AND rowid < ?",
+                rowid_range,
+            ).fetchall()
+        finally:
+            con.close()
+        data = {
+            name: [_coerce(row[i], dt) for row in rows]
+            for i, (name, dt) in enumerate(zip(out_names, dtypes))
+        }
+        yield pd.DataFrame(data, columns=out_names)
 
-    range_df = spark.createDataFrame(
-        ranges, "lo long, hi long"
-    ).repartition(len(ranges))
-    return range_df.mapInPandas(scan, schema)
+    return scan_specs(spark, ranges, scan, schema)
 
 
 def _scan_single(
@@ -196,8 +185,8 @@ def _scan_single(
     tbl: str,
     schema: T.StructType,
     src_names: List[str],
-) -> DataFrame:
-    """WITHOUT ROWID fallback: one driver-side read."""
+) -> Tuple[DataFrame, int]:
+    """WITHOUT ROWID fallback: one driver-side read → (frame, rows)."""
     qt = tbl.replace('"', '""')
     select_cols = ", ".join(
         '"' + c.replace('"', '""') + '"' for c in src_names
@@ -213,7 +202,7 @@ def _scan_single(
         )
         for row in rows
     ]
-    return spark.createDataFrame(coerced, schema)
+    return spark.createDataFrame(coerced, schema), len(rows)
 
 
 def read_sqlite(
@@ -261,15 +250,21 @@ def read_sqlite(
         if not schema.fields:
             continue
         if bounds is None:
-            df = _scan_single(spark, abspath, tbl, schema, src_names)
+            df, n_rows = _scan_single(
+                spark, abspath, tbl, schema, src_names
+            )
+            has_rows = n_rows > 0
             engine = "sqlite3 (stdlib, single-task: WITHOUT ROWID)"
         elif bounds[1] < bounds[0]:
             df = spark.createDataFrame([], schema)
+            has_rows = False
             engine = "sqlite3 (stdlib)"
         else:
+            # MIN(rowid) <= MAX(rowid): the row at MIN(rowid) exists
             df = _scan_ranged(
                 spark, abspath, tbl, schema, src_names, bounds
             )
+            has_rows = True
             engine = "sqlite3 (stdlib, rowid-range parallel)"
         results.append(
             ParseResult(
@@ -277,7 +272,7 @@ def read_sqlite(
                 sheet_name=tbl,
                 engine=engine,
                 file_path=abspath,
-            )
+            ).mark_rows(has_rows)
         )
     if not results:
         return _failed(spark, str(path))

@@ -16,8 +16,10 @@ completed before the first fatal error, so a truncated or damaged
 file yields its intact prefix rows instead of a failed result;
 nothing salvageable → failed. Each discovered table becomes a
 DataFrame via ``spark.createDataFrame`` over the padded all-string
-grid; at scale the unit of parallelism is *many files*, which the
-façade callers get by looping paths into independent lazy plans.
+grid. Only non-empty grids become results, so each result's status is
+known on the driver and ``parse_info`` needs no Spark job. At scale
+the unit of parallelism is *many files*: ``read_spreadsheetml_many``
+parses one group of files per task.
 
 Spark's own ``spark.read.format("xml")`` (native since 4.0) is not
 used because rowTag-based parsing cannot express the namespace-
@@ -35,6 +37,10 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
+from almost_any_file_to_pandas_spark.sources.rangescan import (
+    file_groups,
+    scan_specs,
+)
 
 SS_NS = "{urn:schemas-microsoft-com:office:spreadsheet}"
 
@@ -143,7 +149,7 @@ def read_spreadsheetml(
                 sheet_name=name if name else "Not defined",
                 file_path=str(p),
                 engine="spreadsheetml (salvaged)",
-            )
+            ).mark_rows(True)  # salvaged grids are never empty
             for name, grid in salvaged
         ]
 
@@ -159,7 +165,7 @@ def read_spreadsheetml(
                 sheet_name=sheet_name if sheet_name else "Not defined",
                 file_path=str(p),
                 engine="spreadsheetml",
-            )
+            ).mark_rows(True)
         )
 
     worksheets = list(root.iter(f"{SS_NS}Worksheet"))
@@ -180,7 +186,7 @@ def read_spreadsheetml(
 def read_spreadsheetml_many(spark: SparkSession, paths):
     """Corpus-scale SpreadsheetML ingestion: many .xml files → one
     DataFrame of ragged rows (source_file, sheet_name, row_idx,
-    cells), parsed executor-side via mapInPandas over the file list.
+    cells), parsed executor-side, one task per group of files.
 
     The per-file parse is the same driver-side logic as
     :func:`read_spreadsheetml`, relocated to executors: the driver
@@ -188,19 +194,9 @@ def read_spreadsheetml_many(spark: SparkSession, paths):
     the same corpus shape as ``read_excel_many``. Unparseable files
     contribute zero rows (log-and-continue, reference behavior).
     """
-    import glob as _glob
-    from pathlib import Path as _P
-
-    from pyspark.sql import functions as F  # noqa: F401
-
-    if isinstance(paths, (str, _P)):
-        expanded = sorted(_glob.glob(str(paths))) or [str(paths)]
-    else:
-        expanded = [str(p) for p in paths]
-
     ns = SS_NS
 
-    def _parse_files(batches):
+    def _parse_files(group):
         # Self-contained closure: everything (including the grid
         # builder) is local so cloudpickle ships it by value — workers
         # never import this package.
@@ -216,38 +212,36 @@ def read_spreadsheetml_many(spark: SparkSession, paths):
             width = max((len(r) for r in rows), default=0)
             return [r + [""] * (width - len(r)) for r in rows]
 
-        for batch in batches:
-            out = {"source_file": [], "sheet_name": [], "row_idx": [], "cells": []}
-            for path in batch["path"]:
-                try:
-                    root = _ET.parse(path).getroot()
-                except Exception:
-                    continue
-                worksheets = list(root.iter(f"{ns}Worksheet"))
-                scoped = (
-                    [(ws.get(f"{ns}Name") or "Not defined", t)
-                     for ws in worksheets for t in ws.iter(f"{ns}Table")]
-                    if worksheets
-                    else [("Not defined", t) for t in root.iter(f"{ns}Table")]
-                )
-                for sheet_name, tbl in scoped:
-                    for idx, row in enumerate(grid(tbl)):
-                        out["source_file"].append(path)
-                        out["sheet_name"].append(sheet_name)
-                        out["row_idx"].append(idx)
-                        out["cells"].append(row)
-            # an all-empty dict-of-lists frame infers float64 columns,
-            # which Arrow cannot cast to list<string> — a partition
-            # holding only unparseable files must yield nothing
-            if out["source_file"]:
-                yield pd.DataFrame(out)
+        out = {"source_file": [], "sheet_name": [], "row_idx": [], "cells": []}
+        for path in group:
+            try:
+                root = _ET.parse(path).getroot()
+            except Exception:
+                continue
+            worksheets = list(root.iter(f"{ns}Worksheet"))
+            scoped = (
+                [(ws.get(f"{ns}Name") or "Not defined", t)
+                 for ws in worksheets for t in ws.iter(f"{ns}Table")]
+                if worksheets
+                else [("Not defined", t) for t in root.iter(f"{ns}Table")]
+            )
+            for sheet_name, tbl in scoped:
+                for idx, row in enumerate(grid(tbl)):
+                    out["source_file"].append(path)
+                    out["sheet_name"].append(sheet_name)
+                    out["row_idx"].append(idx)
+                    out["cells"].append(row)
+        # an all-empty dict-of-lists frame infers float64 columns,
+        # which Arrow cannot cast to list<string> — a task holding
+        # only unparseable files must yield nothing
+        if out["source_file"]:
+            yield pd.DataFrame(out)
 
-    files = spark.createDataFrame(
-        [(p,) for p in expanded], "path string"
-    ).repartition(min(len(expanded), spark.sparkContext.defaultParallelism))
-    return files.mapInPandas(
+    return scan_specs(
+        spark,
+        file_groups(spark, paths),
         _parse_files,
-        schema="source_file string, sheet_name string, row_idx int, cells array<string>",
+        "source_file string, sheet_name string, row_idx int, cells array<string>",
     )
 
 
