@@ -35,7 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from almost_any_file_to_pandas_spark.plans import register, table, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    bounded_collect,
+    register,
+    table,
+    table_wide,
+)
 from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 # MinHash parameters: 128 hashes in 32 bands × 4 rows. At Jaccard 0.8
@@ -1208,19 +1213,9 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Small-graph regime bound for connected components (r10, guide
-# §1.2/§3.1): below this edge count the normalized edge list is a
-# couple of MB — the same size class as a broadcast-join build side —
-# and the distributed star loop is pure scheduling overhead (measured
-# at sf0.1: the 4,900-edge doc-chain graph paid 8 rounds × ~0.65 s of
-# Catalyst planning + digest jobs ≈ 5 s for microseconds of actual
-# union-find work). Under the cap the driver runs exact union-find on
-# the collected pairs (min-root labels — the identical fixed point
-# the star algorithm converges to) and ships the labels back as a
-# broadcast-sized frame; at or above it the O(log n) distributed loop
-# runs unchanged. The same two-regime reasoning as a broadcast hash
-# join: the cap bounds driver memory by construction, and at 100 TB
-# the distributed path is always taken.
+# Small-graph regime bound for connected components and the k-core
+# peel (see :func:`~.plans.bounded_collect`): under it the driver
+# runs exact union-find, or the peel, on the collected edges.
 CC_DRIVER_EDGE_CAP = 1 << 17  # 131072 normalized edges ≈ 2 MB of longs
 
 
@@ -1290,12 +1285,10 @@ def connected_components_alternating(
     not-converged, and convergence is still decided by the exact
     set comparison, never by the hash alone.
 
-    r10 two-regime split (see :data:`CC_DRIVER_EDGE_CAP`): the initial
-    digest already counts the normalized edges; under the cap the
-    driver runs exact union-find on the collected pairs and the star
-    loop never starts — the collect is bounded by the gate, the labels
-    are the identical min-root fixed point, and at scale the
-    distributed loop below runs unchanged.
+    Small-graph regime (:data:`CC_DRIVER_EDGE_CAP`, see
+    :func:`~.plans.bounded_collect`): under the cap the driver runs
+    exact union-find on the collected edges and the star loop never
+    starts — the labels are the same min-root fixed point.
 
     At the fixed point the edge set IS the component assignment
     (child → root). ``localCheckpoint`` truncates lineage per round.
@@ -1336,23 +1329,18 @@ def connected_components_alternating(
         ).first()
         return (row["c"], row["h"])
 
-    d_e = _digest(e)
-    if d_e[0] < driver_cap:
-        # small-graph regime (see CC_DRIVER_EDGE_CAP): the collect is
-        # BOUNDED by the gate just evaluated; labels return as a
-        # broadcast-sized frame with the identical min-root semantics
-        spark = edges.sparkSession
-        labels = _driver_union_find(
-            [(r["u"], r["v"]) for r in e.collect()]
-        )
+    small = bounded_collect(e, driver_cap)
+    if small is not None:
+        labels = _driver_union_find([(r["u"], r["v"]) for r in small])
         utype = dict(e.dtypes)["u"]
-        lbl_df = spark.createDataFrame(
+        lbl_df = edges.sparkSession.createDataFrame(
             list(labels.items()), schema=f"u {utype}, lbl {utype}"
         )
         return (
             nodes.join(F.broadcast(lbl_df), "u", "left")
             .select("u", F.coalesce("lbl", "u").alias("lbl"))
         )
+    d_e = _digest(e)
     wu = W.partitionBy("u")
     for _ in range(max_rounds):
         und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))

@@ -885,6 +885,65 @@ def _rfm_kmeans_oracle() -> str:
     """
 
 
+def rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-customer RFM features (``vec_id`` = custkey, ``v`` = recency
+    days, order count, spend cents, each scaled to [0, 1] as an exact
+    q6 rational), checkpointed — the frame both RFM k-means queries
+    train on."""
+    orders = table(spark, sf_dir, "orders")
+    inner = orders.groupBy(F.col("o_custkey").alias("vec_id")).agg(
+        F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
+        F.count("*").alias("n_orders"),
+        F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("spend"),
+    )
+    g = orders.agg(
+        F.max(F.col("o_orderdate").cast("date")).alias("gmax")
+    )
+    b = inner.crossJoin(F.broadcast(g)).select(
+        "vec_id",
+        # datediff returns 32-bit INT; under Spark-4 ANSI mode
+        # r_days * 1000000 overflows once max recency >= 2148 days
+        # (a standard TPC-H span is 2405) — widen BEFORE the scale
+        F.datediff("gmax", "last_d").cast("long").alias("r_days"),
+        "n_orders",
+        F.floor(F.col("spend") * 100 + F.lit(0.5))
+        .cast("long")
+        .alias("spend_c"),
+    )
+    m = b.agg(
+        F.max("r_days").alias("max_r"),
+        F.max("n_orders").alias("max_n"),
+        F.max("spend_c").alias("max_s"),
+    )
+    return (
+        b.crossJoin(F.broadcast(m))
+        .select(
+            "vec_id",
+            F.array(
+                F.expr(
+                    "CASE WHEN max_r = 0 THEN 0.0"
+                    " ELSE (r_days * 1000000 div max_r) / 1000000.0 END"
+                ),
+                F.expr(
+                    "CASE WHEN max_n = 0 THEN 0.0"
+                    " ELSE (n_orders * 1000000 div max_n) / 1000000.0 END"
+                ),
+                F.expr(
+                    "CASE WHEN max_s = 0 THEN 0.0"
+                    " ELSE (spend_c * 1000000 div max_s) / 1000000.0 END"
+                ),
+            ).alias("v"),
+        )
+        # materialize ONCE: the trainer's seed pass, both Lloyd
+        # rounds, and the final assignment all re-execute this
+        # lineage otherwise — each replay is three orders scans
+        # (inner + the two 1-row normalizer aggregates).
+        # Customer-sized frame, same trade-off as the quantizer's
+        # own checkpoints.
+        .localCheckpoint(eager=True)
+    )
+
+
 @register("customer_rfm_kmeans_segments", oracle=_rfm_kmeans_oracle())
 def customer_rfm_kmeans_segments(
     spark: SparkSession, sf_dir: str
@@ -916,58 +975,8 @@ def customer_rfm_kmeans_segments(
         deterministic_kmeans_centroids,
     )
 
+    feat = rfm_features(spark, sf_dir)
     orders = table(spark, sf_dir, "orders")
-    inner = orders.groupBy(F.col("o_custkey").alias("vec_id")).agg(
-        F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
-        F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("spend"),
-    )
-    g = orders.agg(
-        F.max(F.col("o_orderdate").cast("date")).alias("gmax")
-    )
-    b = inner.crossJoin(F.broadcast(g)).select(
-        "vec_id",
-        # datediff returns 32-bit INT; under Spark-4 ANSI mode
-        # r_days * 1000000 overflows once max recency >= 2148 days
-        # (a standard TPC-H span is 2405) — widen BEFORE the scale
-        F.datediff("gmax", "last_d").cast("long").alias("r_days"),
-        "n_orders",
-        F.floor(F.col("spend") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("spend_c"),
-    )
-    m = b.agg(
-        F.max("r_days").alias("max_r"),
-        F.max("n_orders").alias("max_n"),
-        F.max("spend_c").alias("max_s"),
-    )
-    feat = (
-        b.crossJoin(F.broadcast(m))
-        .select(
-            "vec_id",
-            F.array(
-                F.expr(
-                    "CASE WHEN max_r = 0 THEN 0.0"
-                    " ELSE (r_days * 1000000 div max_r) / 1000000.0 END"
-                ),
-                F.expr(
-                    "CASE WHEN max_n = 0 THEN 0.0"
-                    " ELSE (n_orders * 1000000 div max_n) / 1000000.0 END"
-                ),
-                F.expr(
-                    "CASE WHEN max_s = 0 THEN 0.0"
-                    " ELSE (spend_c * 1000000 div max_s) / 1000000.0 END"
-                ),
-            ).alias("v"),
-        )
-        # materialize ONCE (the elbow twin's existing discipline):
-        # the trainer's seed pass, both Lloyd rounds, and the final
-        # assignment all re-execute this lineage otherwise — each
-        # replay is three orders scans (inner + the two 1-row
-        # normalizer aggregates). Customer-sized frame, same
-        # trade-off as the quantizer's own checkpoints.
-        .localCheckpoint(eager=True)
-    )
     cents = deterministic_kmeans_centroids(spark, feat, RFM_K)
     crow = cents.agg(F.collect_list(F.struct("cid", "cvec")).alias("cs"))
     assigned = feat.crossJoin(F.broadcast(crow)).select(
@@ -1059,53 +1068,7 @@ def customer_rfm_kmeans_elbow_curve(
         deterministic_kmeans_centroids,
     )
 
-    orders = table(spark, sf_dir, "orders")
-    inner = orders.groupBy(F.col("o_custkey").alias("vec_id")).agg(
-        F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
-        F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)")).alias("spend"),
-    )
-    g = orders.agg(
-        F.max(F.col("o_orderdate").cast("date")).alias("gmax")
-    )
-    b = inner.crossJoin(F.broadcast(g)).select(
-        "vec_id",
-        # widen datediff's 32-bit INT before the 1e6 scale (ANSI
-        # overflow at >= 2148 days recency; see the segments twin)
-        F.datediff("gmax", "last_d").cast("long").alias("r_days"),
-        "n_orders",
-        F.floor(F.col("spend") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("spend_c"),
-    )
-    m = b.agg(
-        F.max("r_days").alias("max_r"),
-        F.max("n_orders").alias("max_n"),
-        F.max("spend_c").alias("max_s"),
-    )
-    feat = (
-        b.crossJoin(F.broadcast(m))
-        .select(
-            "vec_id",
-            F.array(
-                F.expr(
-                    "CASE WHEN max_r = 0 THEN 0.0"
-                    " ELSE (r_days * 1000000 div max_r) / 1000000.0 END"
-                ),
-                F.expr(
-                    "CASE WHEN max_n = 0 THEN 0.0"
-                    " ELSE (n_orders * 1000000 div max_n) / 1000000.0"
-                    " END"
-                ),
-                F.expr(
-                    "CASE WHEN max_s = 0 THEN 0.0"
-                    " ELSE (spend_c * 1000000 div max_s) / 1000000.0"
-                    " END"
-                ),
-            ).alias("v"),
-        )
-        .localCheckpoint(eager=True)  # shared by all |ks| trainings
-    )
+    feat = rfm_features(spark, sf_dir)  # shared by all |ks| trainings
     arms = []
     for k in RFM_ELBOW_KS:
         cents = deterministic_kmeans_centroids(spark, feat, k)

@@ -28,7 +28,11 @@ from almost_any_file_to_pandas_spark.operators.dedup import (
     _pairs_within_buckets,
     connected_components_alternating,
 )
-from almost_any_file_to_pandas_spark.plans import register, table
+from almost_any_file_to_pandas_spark.plans import (
+    bounded_collect,
+    register,
+    table,
+)
 from almost_any_file_to_pandas_spark.session import apply_engine_conf
 
 EDGE_FACTOR = 2.0  # edge iff co-count > EDGE_FACTOR * mean co-count
@@ -805,38 +809,35 @@ def graph_kcore_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    # r10 two-regime peel (the CC_DRIVER_EDGE_CAP pattern, guide
-    # §1.2/§5): the peel runs on the THRESHOLDED edge list — already
-    # orders of magnitude below the corpus — and at bench scale the
-    # distributed rounds paid 2 blocking checkpoint jobs + a Catalyst
-    # compile per round for microseconds of actual degree counting.
-    # The eager checkpoint above already materialized the edges, so
-    # the count is a cheap stored-blocks job and the collect below is
-    # BOUNDED by the cap it gates on (≈2 MB — the broadcast-build
-    # size class). Above the cap the distributed loop runs unchanged.
-    from almost_any_file_to_pandas_spark.operators.dedup import (
-        CC_DRIVER_EDGE_CAP,
-    )
+    return kcore_peel(edges)
 
-    n_edges0 = edges.count()
-    if n_edges0 < CC_DRIVER_EDGE_CAP:
-        from collections import Counter
 
-        es = [(r["u1"], r["u2"]) for r in edges.collect()]
-        deg = Counter()
-        for a, b in es:
-            deg[a] += 1
-            deg[b] += 1
+def kcore_peel(edges: DataFrame) -> DataFrame:
+    """{KCORE_ROUNDS} synchronous {KCORE_K}-core peel rounds over an
+    (``u1``, ``u2``) edge list → (``round``, ``n_vertices``,
+    ``n_edges``), round 0 being the input graph. Duplicate edges and
+    self-loops count toward degree, the same in both regimes.
+
+    Small-graph regime: under ``dedup.CC_DRIVER_EDGE_CAP`` (read at
+    call time; see :func:`~.plans.bounded_collect`) the rounds run on
+    the collected edges; at or above it, one degree aggregate + two
+    semi-joins per round.
+    """
+    from collections import Counter
+
+    from almost_any_file_to_pandas_spark.operators import dedup
+
+    small = bounded_collect(edges, dedup.CC_DRIVER_EDGE_CAP)
+    if small is not None:
+        es = [(r["u1"], r["u2"]) for r in small]
+        deg = Counter(v for e in es for v in e)
         rows = [(0, len(deg), len(es))]
         for r in range(1, KCORE_ROUNDS + 1):
             surv = {v for v, d in deg.items() if d >= KCORE_K}
             es = [(a, b) for a, b in es if a in surv and b in surv]
-            deg = Counter()
-            for a, b in es:
-                deg[a] += 1
-                deg[b] += 1
+            deg = Counter(v for e in es for v in e)
             rows.append((r, len(surv), len(es)))
-        return spark.createDataFrame(
+        return edges.sparkSession.createDataFrame(
             rows, "round int, n_vertices long, n_edges long"
         )
 

@@ -45,7 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from almost_any_file_to_pandas_spark.plans import register, table_wide
+from almost_any_file_to_pandas_spark.plans import (
+    bounded_collect,
+    register,
+    table_wide,
+)
 from almost_any_file_to_pandas_spark.session import apply_engine_conf
 from almost_any_file_to_pandas_spark.operators.similarity import (
     IVF_K,
@@ -123,46 +127,88 @@ def _argmin_cid(cents_col, vec_col):
 Q12_SAFE_ABS = 8.0
 
 
-# Small-corpus regime bound for the Lloyd's trainer (r10 — the
-# CC_DRIVER_EDGE_CAP pattern): under this row count the training
-# frame is ≤ ~32 MB at dim 64 (the SEMANTIC_FIT_SAMPLE index-build
-# collect class already used by the semantic-dedup backend since
-# round 7), and the distributed trainer's per-round shuffles +
-# blocking checkpoint jobs are pure overhead (measured: 2.8 s warm on
-# a 2,000-vector corpus for microseconds of arithmetic). The driver
-# path replicates the EXACT arithmetic contract — integer-q12
-# distances, DECIMAL(30,15) half-up-quantized mean sums via the
-# JVM's string-path double→decimal semantics, half-up round to 12 —
-# so centroids are bit-identical to the distributed loop (a regime
-# test pins equality; the oracles pin DuckDB parity). At or above the
-# cap the distributed loop runs unchanged.
+def _check_q12(vectors) -> None:
+    """The one-time :data:`Q12_SAFE_ABS` tripwire over a few vectors
+    (the k-means seeds, the k-center picks) — bounded, not a corpus
+    proof. Null vectors and components are skipped, as SQL ``max``
+    skips them."""
+    vals = (x for v in vectors if v is not None for x in v)
+    over = max((abs(x) for x in vals if x is not None), default=None)
+    if over is not None and over > Q12_SAFE_ABS:
+        raise ValueError(
+            f"embedding components reach |x|={over:.3g} > "
+            f"Q12_SAFE_ABS={Q12_SAFE_ABS}: integer-q12 distance terms "
+            "would overflow int64 — rescale the embeddings upstream"
+        )
+
+
+def _sqdist_q12_np(a, b):
+    """numpy twin of :func:`_sqdist_q12` over the last axis (``a`` and
+    ``b`` broadcast): the same IEEE-double products floored per term,
+    summed in int64 — float64 addition would round past 2^53."""
+    import numpy as np
+
+    d = a - b
+    terms = np.floor(d * d * 1e12 + 0.5).astype(np.int64)
+    return terms.sum(axis=-1, dtype=np.int64)
+
+
+def _driver_vectors(emb: DataFrame, cap: int) -> list | None:
+    """The (``vec_id``, ``v``) rows of ``emb`` as ``[(vec_id,
+    [float...])]`` sorted by ``vec_id`` — when there are fewer than
+    ``cap`` (:func:`~.plans.bounded_collect`) and they are clean: no
+    null vector, no null component, one dimension. The driver arms of
+    k-means and k-center reproduce their distributed loops exactly on
+    clean input only; ``None`` sends both regimes to the distributed
+    loop, so degenerate input means the same thing in both."""
+    rows = bounded_collect(emb.select("vec_id", "v"), cap)
+    if rows is None:
+        return None
+    vecs = [r["v"] for r in rows]
+    if any(v is None or None in v for v in vecs):
+        return None
+    if len({len(v) for v in vecs}) > 1:
+        return None
+    return sorted(
+        ((r["vec_id"], list(r["v"])) for r in rows), key=lambda p: p[0]
+    )
+
+
+# Small-corpus regime bound for the Lloyd's trainer and greedy
+# k-center (see :func:`~.plans.bounded_collect`): ≤ ~32 MB of
+# vectors at dim 64, the SEMANTIC_FIT_SAMPLE collect class.
 KMEANS_DRIVER_ROW_CAP = 1 << 16  # 65,536 vectors
 
 
 def _driver_lloyd(rows: list, k: int) -> list:
-    """Exact driver-side Lloyd's over collected (vec_id, v) rows —
-    the arithmetic twin of the distributed loop below (see
-    KMEANS_DRIVER_ROW_CAP). Returns [(cid, [cval...])]."""
+    """Exact driver-side Lloyd's over clean, vec_id-sorted (vec_id, v)
+    rows (:func:`_driver_vectors`) — the arithmetic twin of the
+    distributed loop in :func:`deterministic_kmeans_centroids`:
+    integer-q12 distances, DECIMAL(30,15) half-up mean sums through
+    the JVM's string path, half-up round to 12, so the centroids are
+    bit-identical. Returns [(cid, [cval...])]."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
 
     if not rows:
         return []
-    rows = sorted(rows, key=lambda r: r[0])
-    seed = [list(v) for _, v in rows[:k]]
-    cents = [list(c) for c in seed]
+    cents = [list(v) for _, v in rows[:k]]
     mat = np.array([v for _, v in rows], dtype=np.float64)
     q15 = Decimal(1).scaleb(-15)
     q12 = Decimal(1).scaleb(-12)
+
+    def half_up(x, q):
+        # CAST(x AS DECIMAL(30,15)) and ROUND(x, 12) go through the
+        # JVM's Double.toString → setScale(HALF_UP), which matches
+        # repr() from JDK 19 on (JDK-4511638); on older JDKs the match
+        # is checked on the sf0.01 embeddings and RFM features only
+        # (test_driver_lloyd_decimal_path_matches_jvm).
+        return Decimal(repr(float(x))).quantize(q, ROUND_HALF_UP)
+
     for _ in range(LLOYD_ROUNDS):
         c_arr = np.array(cents, dtype=np.float64)  # (k, d)
-        # integer-q12 squared L2 per (vector, centroid): floor each
-        # term BEFORE the sum, exactly like _sqdist_q12 (int64 sum —
-        # float64 addition would round past 2^53)
-        diff = mat[:, None, :] - c_arr[None, :, :]
-        terms = np.floor(diff * diff * 1e12 + 0.5).astype(np.int64)
-        dists = terms.sum(axis=2, dtype=np.int64)
+        dists = _sqdist_q12_np(mat[:, None, :], c_arr[None, :, :])
         assign = dists.argmin(axis=1)  # first min == smallest cid
         new_cents = []
         for cid in range(len(cents)):
@@ -170,26 +216,14 @@ def _driver_lloyd(rows: list, k: int) -> list:
             if len(members) == 0:
                 new_cents.append(cents[cid])  # empty keeps previous
                 continue
-            cvec = []
-            for dim in range(mat.shape[1]):
-                # SUM(CAST(val AS DECIMAL(30,15))): JVM casts via
-                # Double.toString → setScale(15, HALF_UP); repr()
-                # produces the same shortest decimal string
-                s = sum(
-                    Decimal(repr(float(x))).quantize(
-                        q15, ROUND_HALF_UP
-                    )
-                    for x in members[:, dim]
-                )
-                mean = float(s) / len(members)
-                cvec.append(
-                    float(
-                        Decimal(repr(mean)).quantize(
-                            q12, ROUND_HALF_UP
-                        )
-                    )
-                )
-            new_cents.append(cvec)
+            # per dim: SUM of DECIMAL(30,15) casts / count, ROUND 12
+            new_cents.append([
+                float(half_up(
+                    float(sum(half_up(x, q15) for x in col)) / len(members),
+                    q12,
+                ))
+                for col in members.T
+            ])
         cents = new_cents
     return list(enumerate(cents))
 
@@ -207,54 +241,25 @@ def deterministic_kmeans_centroids(
     from re-executing prior rounds' assignments (lineage doubles per
     round otherwise) — the frame is k rows, so the checkpoint is free.
 
-    r10 two-regime split (:data:`KMEANS_DRIVER_ROW_CAP`): a corpus
-    whose row count sits under the cap collects (bounded by the gate)
-    and trains on the driver with bit-identical arithmetic; above it
-    the distributed loop below runs unchanged.
+    Small-corpus regime (``driver_cap``, see
+    :func:`~.plans.bounded_collect`): clean input under the cap trains
+    on the driver (:func:`_driver_lloyd`); everything else runs the
+    distributed loop below.
 
-    Guards the :data:`Q12_SAFE_ABS` data contract with a one-time
-    check on the seed frame (bounded — a k-row tripwire, not a corpus
-    proof; the contract itself is the documented bound).
+    Guards the :data:`Q12_SAFE_ABS` data contract on the k seed
+    vectors in both regimes (:func:`_check_q12`).
     """
-    if driver_cap and emb.count() < driver_cap:
-        collected = emb.collect()
-        rows = [
-            (r["vec_id"], list(r["v"]))
-            for r in collected
-            if r["v"] is not None
-        ]
-        dims = {len(v) for _, v in rows}
-        # degenerate inputs (null vectors, ragged dims) keep the
-        # distributed loop's null/zip semantics — only the clean
-        # uniform case takes the driver regime
-        if len(rows) == len(collected) and len(dims) <= 1:
-            seed_vals = [x for _, v in sorted(rows)[:k] for x in v]
-            over = max((abs(x) for x in seed_vals), default=None)
-            if over is not None and over > Q12_SAFE_ABS:
-                raise ValueError(
-                    f"embedding components reach |x|={over:.3g} > "
-                    f"Q12_SAFE_ABS={Q12_SAFE_ABS}: integer-q12 "
-                    "distance terms would overflow int64 — rescale "
-                    "the embeddings upstream"
-                )
-            return spark.createDataFrame(
-                _driver_lloyd(rows, k), "cid int, cvec array<double>"
-            )
+    rows = _driver_vectors(emb, driver_cap)
+    if rows is not None:
+        _check_q12(v for _, v in rows[:k])
+        return spark.createDataFrame(
+            _driver_lloyd(rows, k), "cid int, cvec array<double>"
+        )
     wseed = W.orderBy("vec_id")  # bounded: runs on the ≤k-row seed frame
     # k-row checkpoint: the contract tripwire and the seed selection
     # share ONE TakeOrdered pass over the corpus
     seed = emb.orderBy("vec_id").limit(k).localCheckpoint(eager=True)
-    over = seed.agg(
-        F.max(
-            F.array_max(F.transform(F.col("v"), lambda x: F.abs(x)))
-        ).alias("m")
-    ).first()["m"]
-    if over is not None and over > Q12_SAFE_ABS:
-        raise ValueError(
-            f"embedding components reach |x|={over:.3g} > "
-            f"Q12_SAFE_ABS={Q12_SAFE_ABS}: integer-q12 distance terms "
-            "would overflow int64 — rescale the embeddings upstream"
-        )
+    _check_q12(r["v"] for r in seed.select("v").collect())
     cents = (
         seed
         .select(

@@ -2173,69 +2173,61 @@ def sim_kcenter_greedy_coreset(
     {KCENTER_K - 1} chained CTEs (the MMR pattern).
     """
     apply_engine_conf(spark)
-    from almost_any_file_to_pandas_spark.operators.ivf_kmeans import (
-        KMEANS_DRIVER_ROW_CAP,
-        _sqdist_q12,
-    )
-
     emb = table_wide(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    # r10 small-corpus regime (KMEANS_DRIVER_ROW_CAP pattern): the
-    # greedy traversal is K−1 SEQUENTIAL corpus passes — at bench
-    # scale each pass was a Catalyst compile + TakeOrdered job over
-    # 2,000 vectors. Under the cap the whole traversal runs on the
-    # driver with the identical integer-q12 arithmetic (floor of
-    # IEEE-double products — bit-identical in numpy) and identical
-    # (max mind, min vec_id) tie-breaks; above it the distributed
-    # loop below runs unchanged.
-    if emb.count() < KMEANS_DRIVER_ROW_CAP:
-        collected = sorted(
-            (r["vec_id"], list(r["v"]))
-            for r in emb.collect()
-            if r["v"] is not None
-        )
-        if not collected:
-            return spark.createDataFrame(
-                [], schema="rank bigint, vec_id bigint, radius_q12 bigint"
-            )
+    return greedy_kcenter(emb)
+
+
+def greedy_kcenter(emb: DataFrame) -> DataFrame:
+    """The greedy traversal of :func:`sim_kcenter_greedy_coreset` over
+    a (``vec_id``, ``v`` double array) frame → (``rank``, ``vec_id``,
+    ``radius_q12``). Each pick is checked against the q12 data
+    contract before it becomes a center.
+
+    Small-corpus regime (``ivf_kmeans.KMEANS_DRIVER_ROW_CAP``, read at
+    call time; see :func:`~.plans.bounded_collect`): clean input
+    (:func:`~.ivf_kmeans._driver_vectors`) under the cap runs the
+    traversal on the driver with the same integer-q12 distances and
+    (max distance, min vec_id) tie-breaks; everything else runs the
+    K−1 distributed passes.
+    """
+    from almost_any_file_to_pandas_spark.operators import ivf_kmeans
+
+    schema = "rank bigint, vec_id bigint, radius_q12 bigint"
+    spark = emb.sparkSession
+    rows = ivf_kmeans._driver_vectors(emb, ivf_kmeans.KMEANS_DRIVER_ROW_CAP)
+    if rows:
         import numpy as np
 
-        ids = np.array([i for i, _ in collected], dtype=np.int64)
-        mat = np.array([v for _, v in collected], dtype=np.float64)
-        sel_idx = 0  # smallest vec_id
-        out = [(1, int(ids[0]), None)]
-        mind = None
+        mat = np.array([v for _, v in rows], dtype=np.float64)
+        ivf_kmeans._check_q12([rows[0][1]])
+        out = [(1, rows[0][0], None)]
+        picked = [0]  # row indices; row 0 is the smallest vec_id
+        mind = np.full(len(rows), np.iinfo(np.int64).max)
         for i in range(2, KCENTER_K + 1):
-            d = mat - mat[sel_idx]
-            dist = np.floor(d * d * 1e12 + 0.5).astype(np.int64).sum(
-                axis=1
-            )
-            mind = dist if mind is None else np.minimum(mind, dist)
-            # exclude already-selected points, then argmax with
-            # smallest-id tie-break (ids ascend, argmax takes first)
+            dist = ivf_kmeans._sqdist_q12_np(mat, mat[picked[-1]])
+            mind = np.minimum(mind, dist)
+            # exclude picked rows, then argmax: ids ascend, so the
+            # first maximum is the smallest-id tie-break
             cand = mind.copy()
-            for r, vid, _ in out:
-                cand[np.searchsorted(ids, vid)] = -1
-            sel_idx = int(np.argmax(cand))
-            if cand[sel_idx] < 0:
+            cand[picked] = -1
+            sel = int(np.argmax(cand))
+            if cand[sel] < 0:
                 break
-            out.append((i, int(ids[sel_idx]), int(cand[sel_idx])))
-        return spark.createDataFrame(
-            out, schema="rank bigint, vec_id bigint, radius_q12 bigint"
-        )
-    first = (
-        emb.orderBy("vec_id").limit(1).collect()
-    )  # bounded: one row
+            ivf_kmeans._check_q12([rows[sel][1]])
+            picked.append(sel)
+            out.append((i, rows[sel][0], int(cand[sel])))
+        return spark.createDataFrame(out, schema=schema)
+    first = emb.orderBy("vec_id").limit(1).collect()  # bounded: one row
     if not first:
-        return spark.createDataFrame(
-            [], schema="rank bigint, vec_id bigint, radius_q12 bigint"
-        )
+        return spark.createDataFrame([], schema=schema)
+    ivf_kmeans._check_q12([first[0]["v"]])
     selected = [(1, int(first[0]["vec_id"]), None, list(first[0]["v"]))]
     for i in range(2, KCENTER_K + 1):
         sel_ids = [s[1] for s in selected]
         dists = [
-            _sqdist_q12(
+            ivf_kmeans._sqdist_q12(
                 F.col("v"), F.array(*[F.lit(float(x)) for x in vec])
             )
             for _, _, _, vec in selected
@@ -2251,12 +2243,12 @@ def sim_kcenter_greedy_coreset(
         if not pick:
             break
         row = pick[0]
+        ivf_kmeans._check_q12([row["v"]])
         selected.append(
             (i, int(row["vec_id"]), int(row["mind"]), list(row["v"]))
         )
     return spark.createDataFrame(
-        [(r, vid, rad) for r, vid, rad, _ in selected],
-        schema="rank bigint, vec_id bigint, radius_q12 bigint",
+        [(r, vid, rad) for r, vid, rad, _ in selected], schema=schema
     )
 
 

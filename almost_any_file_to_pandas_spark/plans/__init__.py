@@ -426,11 +426,27 @@ def load_all() -> None:
 # metadata Spark itself caches in its FileStatusCache / catalog; it
 # is NEVER row data, and every query still scans the parquet for all
 # of its data). The key carries file size + mtime_ns, so any rewrite
-# of the data invalidates the entry, plus the two confs that change
-# what schema inference returns for timestamp columns. Directories
-# (multi-file tables) skip the cache — their mtime does not track
-# content.
+# of the data invalidates the entry (a same-size rewrite within one
+# mtime tick of a coarse-grained filesystem would not), plus every
+# session conf that changes what inference returns for a single file:
+#
+# - ``spark.sql.legacy.parquet.nanosAsLong``: TIMESTAMP(NANOS) → long;
+# - ``spark.sql.parquet.inferTimestampNTZ.enabled``: unannotated
+#   timestamps → TIMESTAMP_NTZ;
+# - ``spark.sql.parquet.binaryAsString``: unannotated BINARY → string;
+# - ``spark.sql.parquet.int96AsTimestamp``: INT96 → timestamp.
+#
+# Keying on the confs (not clearing the cache when they are set) keeps
+# the cache alive: every registered query calls ``apply_engine_conf``.
+# Directories (multi-file tables) skip the cache — their mtime does
+# not track content.
 _SCHEMA_CACHE: dict = {}
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -442,16 +458,8 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
             return spark.read.parquet(path)
     except OSError:
         return spark.read.parquet(path)
-    key = (
-        path,
-        st.st_size,
-        st.st_mtime_ns,
-        str(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "")),
-        str(
-            spark.conf.get(
-                "spark.sql.parquet.inferTimestampNTZ.enabled", ""
-            )
-        ),
+    key = (path, st.st_size, st.st_mtime_ns) + tuple(
+        str(spark.conf.get(c)) for c in _SCHEMA_CONFS
     )
     schema = _SCHEMA_CACHE.get(key)
     if schema is not None:
@@ -508,6 +516,34 @@ def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def bounded_collect(df: DataFrame, cap: int) -> Optional[list]:
+    """The rows of ``df`` when it holds fewer than ``cap`` of them,
+    else ``None`` — the one gate of the small-side driver regime.
+
+    CC, the k-core peel, Lloyd's k-means and greedy k-center loop over
+    an input that is small at bench scale; distributed, each round
+    pays a Catalyst compile, a shuffle and a blocking job for
+    microseconds of arithmetic (sf0.1: 8 CC rounds ≈ 5 s). Under the
+    cap the operator runs the same loop exactly on the collected rows;
+    at or above it the distributed loop runs. As with a broadcast
+    join, the cap bounds driver memory, and at 100 TB the distributed
+    path is always taken. Choosing the regime from the size seen at
+    run time is the policy of Continuously Adaptive Similarity Search
+    (SIGMOD 2020).
+
+    ``df.limit(cap).collect()`` decides what ``df.count() < cap``
+    decided, with one bounded collect instead of a full count followed
+    by a collect. ``cap <= 0`` starts no job: tests force the distributed regime by
+    setting an operator's cap constant (or ``driver_cap``) to 0. Both
+    regimes must agree, degenerate input included: what the driver
+    arm cannot reproduce exactly goes to the distributed arm.
+    """
+    if cap <= 0:
+        return None
+    rows = df.limit(cap).collect()
+    return rows if len(rows) < cap else None
 
 
 def _max_partition_bytes(spark: SparkSession) -> int:

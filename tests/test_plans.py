@@ -1425,13 +1425,16 @@ def test_session_r5d_plan_shapes(spark):
     assert ps.count("Expand") == 0  # no count-distinct expansion
 
 
-def test_session_r5e_plan_shapes(spark):
+def test_session_r5e_plan_shapes(spark, monkeypatch):
     """Round-5 fifth-session additions: KS census walk, MASE monthly
     backtest, k-core peel. The statistics pair must stay single-scan
     (bounded-frame windows, no self-join branches); the k-core result
     must read ONLY checkpointed edge RDDs — the corpus scan happens
-    once at build time, never in the returned plan."""
+    once at build time, never in the returned plan. The peel's
+    distributed regime (cap 0) is the plan asserted; the default
+    small-graph regime returns driver-built rows, no scan either."""
     from almost_any_file_to_pandas_spark import plans
+    from almost_any_file_to_pandas_spark.operators import dedup
 
     plans.load_all()
     sf = "/root/testdata/sf0.001"
@@ -1452,7 +1455,10 @@ def test_session_r5e_plan_shapes(spark):
     assert "Join" not in pm
     assert pm.count("Window") == 1  # both lags share one spec
 
-    pc = plan("graph_kcore_trajectory")
+    assert plan("graph_kcore_trajectory").count("Scan parquet") == 0
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "CC_DRIVER_EDGE_CAP", 0)
+        pc = plan("graph_kcore_trajectory")
     assert pc.count("Scan parquet") == 0  # all rounds checkpointed
     assert "CartesianProduct" not in pc
     assert pc.count("Union") >= 1
