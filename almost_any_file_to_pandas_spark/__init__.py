@@ -21,8 +21,11 @@ The reference is a single-process, eager, row-at-a-time pandas library.
 This engine instead declares *lazy* DataFrame plans and lets Catalyst +
 Tungsten pick physical strategy: parquet/CSV/JSON scans use Spark's
 native distributed readers (predicate pushdown + column pruning for
-free); formats Spark lacks (xlsx, SpreadsheetML XML, pickle, PDF) are
-Python DataSources / driver-side bridges with per-sheet partitioning.
+free); formats Spark lacks (xlsx, SpreadsheetML XML, sqlite, avro, pickle,
+PDF, ...) hand their rows over through Arrow: executor-side scans
+(``Range → MapInPandas``, one task per sheet, range or file group) or,
+for a single-document grid the driver already parsed, one
+``createDataFrame`` over a pandas frame.
 All hot-path expressions are built-in ``pyspark.sql.functions`` (JVM,
 whole-stage codegen); Python appears only in Arrow-batched Pandas UDFs
 where semantics genuinely require it.

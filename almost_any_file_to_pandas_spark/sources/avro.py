@@ -12,11 +12,14 @@ carrying the writer schema JSON + codec, 16-byte sync marker) then
 independent BLOCKS, each ``(row count, byte size, payload, sync)``.
 The driver walks only the block HEADERS (seek-skipping payloads — an
 O(#blocks) index pass; a production deployment persists this index
-next to the file), then ships ``(offset, size, count)`` triples to
-the executors, which decode their blocks independently — the same
-split-by-structure pattern as the Excel sheet fan-out, but
-row-parallel. Executors re-open the path by name, so files must live
-on storage all executors reach (shared FS / object store).
+next to the file), then cuts the ``(offset, size, count)`` block list
+into contiguous groups, one executor task each
+(``rangescan.scan_specs``, plan ``Range → MapInPandas``), so rows keep
+file and block order. Each task decodes its blocks and hands the rows
+to Spark as Arrow batches of object-dtype columns: ``long`` values stay
+exact next to nulls, and multi-branch unions (Python tuples) arrive as
+structs. Executors re-open the path by name, so files must live on
+storage all executors reach (shared FS / object store).
 Supported: records of null/boolean/int/long/float/double/string/
 bytes; ``[null, T]`` unions (nullable column) and multi-branch
 unions (struct-of-nullables, one ``u{k}`` field per non-null
@@ -36,6 +39,11 @@ from pathlib import Path
 from typing import Iterator, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
+
+from almost_any_file_to_pandas_spark.sources.rangescan import (
+    scan_specs,
+    split_range,
+)
 
 AVRO_MAGIC = b"Obj\x01"
 
@@ -509,19 +517,24 @@ def _scan_avro(spark: SparkSession, path) -> Tuple[DataFrame, int]:
     n_rows = sum(count for count, _off, _size in blocks)
     if not blocks:
         return spark.createDataFrame([], ddl), n_rows
-    sc = spark.sparkContext
-    n_slices = min(len(blocks), sc.defaultParallelism)
+    specs = [(p, codec, count, off, size) for count, off, size in blocks]
+    return _scan_blocks(spark, specs, decoders, ddl), n_rows
 
-    def decode_range(spec):
-        count, off, size = spec
-        # executors re-read only their payload byte range
-        with open(p, "rb") as fh:
-            fh.seek(off)
-            payload = fh.read(size)
-        return decode_avro_block(payload, codec, decoders, count)
 
-    rdd = sc.parallelize(blocks, n_slices).flatMap(decode_range)
-    return spark.createDataFrame(rdd, ddl), n_rows
+def _scan_blocks(spark: SparkSession, specs, decoders, ddl) -> DataFrame:
+    """Decode ``(file, codec, count, offset, size)`` block specs on
+    executors, one task per contiguous run of blocks, so the rows keep
+    file and block order. Each task re-reads only its payload bytes."""
+    groups = [specs[a:b] for a, b in split_range(spark, 0, len(specs))]
+
+    def scan(group) -> Iterator:
+        for fp, codec, count, off, size in group:
+            with open(fp, "rb") as fh:
+                fh.seek(off)
+                payload = fh.read(size)
+            yield decode_avro_block(payload, codec, decoders, count)
+
+    return scan_specs(spark, groups, scan, ddl)
 
 
 def synth_avro(
@@ -624,11 +637,11 @@ def read_avro_many(spark: SparkSession, paths) -> DataFrame:
     façade's per-file metadata contract, not throughput). The driver
     reads each file's HEADER + block index only (O(#blocks) seeks,
     the pass a production deployment persists as a manifest);
-    executors decode `(file, codec, offset, size, count)` slices
-    independently, so parallelism = total block count across the
-    corpus, not file count. All files must share one schema (the
-    homogeneous-corpus assumption of the other `_many` readers);
-    codecs may differ per file."""
+    executors decode contiguous groups of `(file, codec, count,
+    offset, size)` block specs, so parallelism follows the total block
+    count across the corpus, not the file count. All files must share
+    one schema (the homogeneous-corpus assumption of the other `_many`
+    readers); codecs may differ per file."""
     import glob as _glob
 
     if isinstance(paths, (str, Path)):
@@ -661,20 +674,7 @@ def read_avro_many(spark: SparkSession, paths) -> DataFrame:
                 specs.append((fp, codec, count, off, size))
     if not specs:
         return spark.createDataFrame([], ddl0)
-    sc = spark.sparkContext
-    decoders = decoders0
-
-    def decode_spec(spec):
-        fp, codec, count, off, size = spec
-        with open(fp, "rb") as fh:
-            fh.seek(off)
-            payload = fh.read(size)
-        return decode_avro_block(payload, codec, decoders, count)
-
-    rdd = sc.parallelize(
-        specs, min(len(specs), sc.defaultParallelism)
-    ).flatMap(decode_spec)
-    return spark.createDataFrame(rdd, ddl0)
+    return _scan_blocks(spark, specs, decoders0, ddl0)
 
 
 _SPARK_TO_AVRO = {

@@ -188,11 +188,8 @@ def read_dbf(
         (f.name, f.ftype, f.length, f.decimals, f.offset)
         for f in fields
     ]
-    out_names = [f.name for f in fields]
 
     def scan(record_range: Tuple[int, int]) -> Iterator:
-        import pandas as pd
-
         lo, hi = record_range
         specs = [_Field(*s) for s in field_specs]
         rows = []
@@ -210,7 +207,7 @@ def read_dbf(
                         for f in specs
                     )
                 )
-        yield pd.DataFrame(rows, columns=out_names)
+        yield rows
 
     df = scan_specs(spark, ranges, scan, schema)
     return [

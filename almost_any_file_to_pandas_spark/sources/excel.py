@@ -10,12 +10,10 @@ width (the Excel analogue of the text pipeline's max-columns pre-scan
 D3, main.py:360-368 — needed because a DataFrame schema is fixed
 before read). The width is also the result's status: ``width > 0``
 means a row exists, so ``parse_info`` needs no Spark job. Row data is
-then read *executor-side* through a Spark 4
-Python DataSource (`excel_core.ExcelDataSource`), one partition per
-worksheet part: the parse runs where the data will be consumed, and
-reading many workbooks in one job parallelizes across files. The
-DataSource module is registered with cloudpickle by value, so workers
-need no package install.
+then read *executor-side* through ``rangescan.scan_specs``, one task
+per worksheet (plan ``Range → MapInPandas``): the parse runs where the
+data will be consumed, and ``read_excel_many`` spreads groups of
+workbooks over tasks. Workers import ``excel_core`` from this package.
 
 All six suffixes parse natively with stdlib code in ``excel_core``:
 .xlsx (OOXML), .xlsb (BIFF12 record reader), .xls (BIFF8 records in a
@@ -26,13 +24,17 @@ degrade to a failed result like the reference's log-and-continue path.
 from __future__ import annotations
 
 from pathlib import Path
-from typing import List, Union
+from typing import Iterator, List, Union
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
 from almost_any_file_to_pandas_spark.sources import excel_core
+from almost_any_file_to_pandas_spark.sources.rangescan import (
+    file_groups,
+    scan_specs,
+)
 
 NATIVE_FORMATS = {
     ".xlsx": "xlsx",
@@ -43,24 +45,6 @@ NATIVE_FORMATS = {
     ".odf": "ods",
 }
 ZIP_XML_FORMATS = NATIVE_FORMATS  # back-compat alias
-_registered_sessions: set[int] = set()
-
-
-def _register(spark: SparkSession) -> None:
-    """Register the Python DataSource once per session, shipping the
-    stdlib-only core module by value inside the pickled class."""
-    key = id(spark)
-    if key in _registered_sessions:
-        return
-    # PySpark serializes DataSource classes with its *vendored*
-    # cloudpickle — by-value registration must target that module, or
-    # workers try (and fail) to import this package.
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(excel_core)
-    spark.dataSource.register(excel_core.ExcelDataSource)
-    spark.dataSource.register(excel_core.ExcelCorpusDataSource)
-    _registered_sessions.add(key)
 
 
 def _failed(spark: SparkSession, path: str, engine: str) -> List[ParseResult]:
@@ -108,7 +92,6 @@ def read_excel(
     if not inventory:  # no sheets → failed (main.py:251-253)
         return _failed(spark, str(p), engine=fmt)
 
-    _register(spark)
     results: List[ParseResult] = []
     for sheet_name, ref in inventory:
         # Driver pre-scan: width only (schema must precede the read).
@@ -122,52 +105,72 @@ def read_excel(
                     data=df,
                     sheet_name=sheet_name,
                     file_path=str(p),
-                    engine=f"{fmt} datasource",
+                    engine=f"{fmt} executor scan",
                 ).mark_failed()
             )
             continue
-        df = (
-            spark.read.format("aaftp_excel")
-            .option("path", str(p))
-            .option("fmt", fmt)
-            .option("sheetref", ref)
-            .option("width", str(width))
-            .load()
-        )
         # width > 0: the pre-scan saw a cell, so the sheet has a row
         results.append(
             ParseResult(
-                data=df,
+                data=_scan_sheet(spark, str(p), fmt, ref, width),
                 sheet_name=sheet_name,
                 file_path=str(p),
-                engine=f"{fmt} datasource",
+                engine=f"{fmt} executor scan",
             ).mark_rows(True)
         )
     return results
 
 
-def read_excel_many(spark: SparkSession, paths, fmt: str = "xlsx") -> "DataFrame":
+def _scan_sheet(
+    spark: SparkSession, path: str, fmt: str, ref: str, width: int
+) -> DataFrame:
+    """One worksheet as ``c0..c{width-1}`` strings, parsed in one task:
+    a worksheet part is a single deflate stream, not splittable."""
+
+    def scan(sheet_ref: str) -> Iterator:
+        rows = excel_core.sheet_rows(path, fmt, sheet_ref)
+        yield excel_core.padded(rows, width)
+
+    schema = T.StructType(
+        [T.StructField(f"c{i}", T.StringType()) for i in range(width)]
+    )
+    return scan_specs(spark, [ref], scan, schema)
+
+
+def read_excel_many(spark: SparkSession, paths, fmt: str = "xlsx") -> DataFrame:
     """Corpus-scale workbook ingestion: one DataFrame over many files,
-    one DataSource partition per file (parallelism = file count),
-    ragged rows as (source_file, sheet_name, row_idx, cells).
+    one task per group of files (``rangescan.file_groups``), ragged
+    rows as (source_file, sheet_name, row_idx, cells).
 
     No driver pre-scan: sheet enumeration and parsing happen in the
-    executor that owns the partition. Normalize downstream, e.g.::
+    task that owns the file, so driver cost is O(#files) path strings.
+    An unreadable workbook or sheet contributes no rows. Normalize
+    width downstream, e.g.::
 
         width = df.agg(F.max(F.size("cells"))).first()[0]
         df.select(..., *[F.element_at("cells", i+1) for i in range(width)])
     """
-    import glob as _glob
-    from pathlib import Path as _P
 
-    if isinstance(paths, (str, _P)):
-        expanded = sorted(_glob.glob(str(paths))) or [str(paths)]
-    else:
-        expanded = [str(p) for p in paths]
-    _register(spark)
-    return (
-        spark.read.format("aaftp_excel_corpus")
-        .option("paths", "\x1f".join(expanded))
-        .option("fmt", fmt)
-        .load()
+    def scan(group: List[str]) -> Iterator:
+        for path in group:
+            try:
+                inventory = excel_core.sheet_inventory(path, fmt)
+            except Exception:
+                continue
+            for sheet_name, ref in inventory:
+                try:
+                    rows = excel_core.sheet_rows(path, fmt, ref)
+                except Exception:
+                    continue
+                yield [
+                    (path, sheet_name, idx,
+                     ["" if v is None else str(v) for v in row])
+                    for idx, row in enumerate(rows)
+                ]
+
+    return scan_specs(
+        spark,
+        file_groups(spark, paths),
+        scan,
+        "source_file string, sheet_name string, row_idx int, cells array<string>",
     )

@@ -1,4 +1,4 @@
-"""Self-contained (stdlib-only) Excel parsing core + Python DataSource.
+"""Self-contained (stdlib-only) Excel parsing core.
 
 Covers the reference's Excel arm (`ImportExcel`, /root/reference/
 main.py:239-265): enumerate sheets, read every sheet headerless with
@@ -22,11 +22,10 @@ formats directly from their XML parts:
   LabelSst/Label/Number/RK/MulRk/BoolErr/Formula, XF/FORMAT date
   styles).
 
-EVERYTHING in this module must stay importable-by-value: the façade
-registers this module with ``cloudpickle.register_pickle_by_value`` so
-the :class:`ExcelDataSource` class and these parser functions ship to
-executors inside the serialized plan — no package install on workers.
-Keep imports stdlib-only.
+The module is plain parsing, with no Spark code: ``excel.py`` calls
+it on the driver for the sheet inventory and width pre-scan, and from
+executor tasks (``rangescan.scan_specs``) for the row data. Keep
+imports stdlib-only.
 """
 
 from __future__ import annotations
@@ -852,7 +851,7 @@ def ods_sheet_rows(path: str, table_index: int) -> list[list[str | None]]:
 
 
 # ---------------------------------------------------------------------------
-# Generic helpers + Python DataSource (Spark 4)
+# Generic helpers (the façade's driver pre-scan and executor scans)
 # ---------------------------------------------------------------------------
 
 
@@ -890,114 +889,3 @@ def padded(rows: list[list[str | None]], width: int) -> list[list[str]]:
         [("" if i >= len(r) or r[i] is None else str(r[i])) for i in range(width)]
         for r in rows
     ]
-
-
-try:  # pragma: no cover - import guard exercised only on Spark < 4
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _SheetPartition(InputPartition):
-        def __init__(self, ref: str, width: int):
-            self.ref = ref
-            self.width = width
-
-    class ExcelReader(DataSourceReader):
-        def __init__(self, options):
-            self.path = options["path"]
-            self.fmt = options.get("fmt", "xlsx")
-            self.ref = options["sheetref"]
-            self.width = int(options["width"])
-
-        def partitions(self):
-            # One worksheet = one partition: a worksheet XML part is a
-            # single deflate stream, not splittable mid-part. Cross-
-            # sheet and cross-file parallelism come from reading each
-            # sheet as its own DataFrame (the façade fans out) over
-            # many files.
-            return [_SheetPartition(self.ref, self.width)]
-
-        def read(self, partition):
-            rows = sheet_rows(self.path, self.fmt, partition.ref)
-            for row in padded(rows, partition.width):
-                yield tuple(row)
-
-    class ExcelDataSource(DataSource):
-        """spark.read.format(...) adapter: executor-side stdlib parse
-        of one sheet (options: path, fmt, sheetref, width)."""
-
-        @classmethod
-        def name(cls):
-            return "aaftp_excel"
-
-        def schema(self):
-            width = int(self.options["width"])
-            return ", ".join(f"c{i} string" for i in range(width))
-
-        def reader(self, schema):
-            return ExcelReader(self.options)
-
-except ImportError:  # pragma: no cover
-    ExcelDataSource = None  # type: ignore[assignment]
-
-
-try:  # pragma: no cover - Spark < 4 guard mirrors ExcelDataSource
-    from pyspark.sql.datasource import DataSource as _DS2  # noqa: F401
-
-    class _FilePartition(InputPartition):
-        def __init__(self, path: str):
-            self.path = path
-
-    class ExcelCorpusReader(DataSourceReader):
-        """Many-workbooks reader: one partition per file; each
-        partition enumerates its own sheets executor-side and yields
-        ragged rows as (source_file, sheet_name, row_idx, cells).
-
-        The array<string> cells column sidesteps the fixed-width
-        schema problem entirely — no driver pre-scan of any workbook;
-        callers normalize width downstream with the same pad
-        expressions the text pipeline uses. This is the 100 TB shape:
-        driver cost is O(#files) path strings, all parsing runs where
-        the tasks run.
-        """
-
-        def __init__(self, options):
-            self.paths = options["paths"].split("\x1f")
-            self.fmt = options.get("fmt", "xlsx")
-
-        def partitions(self):
-            return [_FilePartition(p) for p in self.paths]
-
-        def read(self, partition):
-            fmt = self.fmt
-            try:
-                inventory = sheet_inventory(partition.path, fmt)
-            except Exception:
-                return  # unreadable workbook → contributes no rows
-            for sheet_name, ref in inventory:
-                try:
-                    rows = sheet_rows(partition.path, fmt, ref)
-                except Exception:
-                    continue
-                for idx, row in enumerate(rows):
-                    yield (
-                        partition.path,
-                        sheet_name,
-                        idx,
-                        ["" if v is None else str(v) for v in row],
-                    )
-
-    class ExcelCorpusDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "aaftp_excel_corpus"
-
-        def schema(self):
-            return (
-                "source_file string, sheet_name string, "
-                "row_idx int, cells array<string>"
-            )
-
-        def reader(self, schema):
-            return ExcelCorpusReader(self.options)
-
-except ImportError:  # pragma: no cover
-    ExcelCorpusDataSource = None  # type: ignore[assignment]

@@ -14,11 +14,13 @@ Spark design: like SpreadsheetML (xmlss.py), a single HTML document
 is not splittable, so structure discovery runs driver-side on the
 stdlib ``html.parser`` — which is error-tolerant BY DESIGN (no
 exception on malformed markup; whatever tables complete are kept, a
-built-in salvage pass). Each non-empty table becomes a DataFrame via
-``createDataFrame`` over the padded grid, its status known on the
-driver (no Spark job for ``parse_info``); at corpus scale the unit
-of parallelism is many files (``read_html_many``, executor-side, one
-task per group of files — the ``read_spreadsheetml_many`` shape).
+built-in salvage pass). The driver holds each non-empty table as a
+padded grid and hands it to Spark as one Arrow ``createDataFrame``
+over an object-dtype pandas frame (``rangescan.object_frame``), its
+status known on the driver (no Spark job for ``parse_info``); at
+corpus scale the unit of parallelism is many files
+(``read_html_many``, one executor task per group of files through
+``rangescan.scan_specs`` — the ``read_spreadsheetml_many`` shape).
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from pyspark.sql import types as T
 from almost_any_file_to_pandas_spark.result import ParseResult
 from almost_any_file_to_pandas_spark.sources.rangescan import (
     file_groups,
+    object_frame,
     scan_specs,
 )
 
@@ -179,11 +182,9 @@ def extract_tables(text: str) -> list[list[list[str]]]:
 
 
 def _grid_df(spark: SparkSession, grid: list[list[str]]):
-    width = len(grid[0]) if grid else 0
-    schema = T.StructType(
-        [T.StructField(f"c{i}", T.StringType()) for i in range(width)]
-    )
-    return spark.createDataFrame([tuple(r) for r in grid], schema)
+    names = [f"c{i}" for i in range(len(grid[0]) if grid else 0)]
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    return spark.createDataFrame(object_frame(grid, names), schema)
 
 
 def _failed(spark: SparkSession, path: str) -> List[ParseResult]:
@@ -233,35 +234,20 @@ def read_html_many(spark: SparkSession, paths):
     with file count; unparseable files contribute zero rows."""
 
     def _parse_files(group):
-        import pandas as pd
-
-        from almost_any_file_to_pandas_spark.sources.htmltab import (
-            extract_tables as _extract,
-        )
-
-        out = {"source_file": [], "table_idx": [], "row_idx": [],
-               "cells": []}
         for path in group:
             try:
                 raw = Path(path).read_bytes()
-                try:
-                    text = raw.decode("utf-8")
-                except UnicodeDecodeError:
-                    text = raw.decode("latin-1")
-                grids = _extract(text)
             except OSError:
                 continue
-            for t_idx, grid in enumerate(grids):
-                for r_idx, row in enumerate(grid):
-                    out["source_file"].append(path)
-                    out["table_idx"].append(t_idx)
-                    out["row_idx"].append(r_idx)
-                    out["cells"].append(row)
-        # an all-empty dict-of-lists frame infers float64 columns,
-        # which Arrow cannot cast to list<string> — a task holding
-        # only table-less/unreadable files yields nothing
-        if out["source_file"]:
-            yield pd.DataFrame(out)
+            try:
+                text = raw.decode("utf-8")
+            except UnicodeDecodeError:
+                text = raw.decode("latin-1")
+            yield [
+                (path, t_idx, r_idx, row)
+                for t_idx, grid in enumerate(extract_tables(text))
+                for r_idx, row in enumerate(grid)
+            ]
 
     return scan_specs(
         spark,

@@ -50,6 +50,7 @@ from pyspark.sql import types as T
 
 from almost_any_file_to_pandas_spark.result import ParseResult
 from almost_any_file_to_pandas_spark.sources.rangescan import (
+    object_frame,
     scan_specs,
     split_range,
 )
@@ -94,6 +95,10 @@ def _coerce(value, dtype: T.DataType):
     if isinstance(dtype, T.BinaryType):
         return value if isinstance(value, bytes) else None
     return None
+
+
+def _coerce_rows(rows: List[tuple], dtypes: List[T.DataType]) -> List[tuple]:
+    return [tuple(_coerce(v, dt) for v, dt in zip(row, dtypes)) for row in rows]
 
 
 def _connect_ro(path: str) -> sqlite3.Connection:
@@ -155,12 +160,9 @@ def _scan_ranged(
     select_cols = ", ".join(
         '"' + c.replace('"', '""') + '"' for c in src_names
     )
-    out_names = [f.name for f in schema.fields]
     dtypes = [f.dataType for f in schema.fields]
 
     def scan(rowid_range: Tuple[int, int]) -> Iterator:
-        import pandas as pd
-
         con = _connect_ro(path)
         try:
             rows = con.execute(
@@ -170,11 +172,7 @@ def _scan_ranged(
             ).fetchall()
         finally:
             con.close()
-        data = {
-            name: [_coerce(row[i], dt) for row in rows]
-            for i, (name, dt) in enumerate(zip(out_names, dtypes))
-        }
-        yield pd.DataFrame(data, columns=out_names)
+        yield _coerce_rows(rows, dtypes)
 
     return scan_specs(spark, ranges, scan, schema)
 
@@ -196,13 +194,9 @@ def _scan_single(
         rows = con.execute(f'SELECT {select_cols} FROM "{qt}"').fetchall()
     finally:
         con.close()
-    coerced = [
-        tuple(
-            _coerce(v, f.dataType) for v, f in zip(row, schema.fields)
-        )
-        for row in rows
-    ]
-    return spark.createDataFrame(coerced, schema), len(rows)
+    coerced = _coerce_rows(rows, [f.dataType for f in schema.fields])
+    pdf = object_frame(coerced, schema.fieldNames())
+    return spark.createDataFrame(pdf, schema), len(rows)
 
 
 def read_sqlite(

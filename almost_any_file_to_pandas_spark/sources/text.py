@@ -9,7 +9,7 @@ Spark redesign: ONE driver-side bounded-prefix pass for encoding +
 delimiter + provisional width (the reference reads the file 4+ times,
 SURVEY.md §3.2), then a single distributed ``spark.read.text`` scan
 with the T1-T4 pipeline as built-in column expressions (split /
-array_repeat / concat / regexp_replace — all JVM-side, codegen'd).
+array_repeat / concat / btrim — all JVM-side, codegen'd).
 We read via ``text`` + ``F.split`` rather than the CSV reader because
 the reference's semantics are *straight split, no quote handling*
 (main.py:347): the CSV reader's quote/escape logic would diverge.
@@ -45,10 +45,7 @@ def cells_expr(value_col, delimiter: str):
     edge cells exactly as the reference does — then straight split
     (no quoting).
     """
-    trimmed = F.regexp_replace(
-        F.regexp_replace(value_col, r"^\t+", ""), r"\t+$", ""
-    )
-    return F.split(trimmed, re.escape(delimiter), -1)
+    return F.split(F.btrim(value_col, F.lit("\t")), re.escape(delimiter), -1)
 
 
 def pad_cells(cells, width: int):
@@ -63,12 +60,9 @@ def pad_cells(cells, width: int):
 
 def strip_quote_runs(col):
     """T4 — Python ``strip('\"').strip(\"'\")`` removes *runs* of the
-    quote char at both ends (main.py:348); regexp equivalent.
-    Matches the reference's order: double-quote runs first, then
-    single-quote runs."""
-    return F.regexp_replace(
-        F.regexp_replace(col, r'^"+|"+$', ""), r"^'+|'+$", ""
-    )
+    quote char at both ends (main.py:348), in the reference's order:
+    double-quote runs first, then single-quote runs."""
+    return F.btrim(F.btrim(col, F.lit('"')), F.lit("'"))
 
 
 _WIDE_CHARSETS = {

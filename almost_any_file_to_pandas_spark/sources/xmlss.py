@@ -14,12 +14,15 @@ pass (the reference's ``lxml recover=True, huge_tree=True`` contract,
 main.py:276): an incremental ``XMLPullParser`` keeps every Row that
 completed before the first fatal error, so a truncated or damaged
 file yields its intact prefix rows instead of a failed result;
-nothing salvageable → failed. Each discovered table becomes a
-DataFrame via ``spark.createDataFrame`` over the padded all-string
-grid. Only non-empty grids become results, so each result's status is
-known on the driver and ``parse_info`` needs no Spark job. At scale
-the unit of parallelism is *many files*: ``read_spreadsheetml_many``
-parses one group of files per task.
+nothing salvageable → failed. The driver holds each discovered table
+as a padded all-string grid and hands it to Spark as one Arrow
+``createDataFrame`` over an object-dtype pandas frame
+(``rangescan.object_frame``; plan ``LocalTableScan``). Only non-empty
+grids become results, so each result's status is known on the driver
+and ``parse_info`` needs no Spark job. At scale the unit of
+parallelism is *many files*: ``read_spreadsheetml_many`` parses one
+group of files per executor task (``rangescan.scan_specs``), so the
+driver holds no rows.
 
 Spark's own ``spark.read.format("xml")`` (native since 4.0) is not
 used because rowTag-based parsing cannot express the namespace-
@@ -39,6 +42,7 @@ from pyspark.sql import types as T
 from almost_any_file_to_pandas_spark.result import ParseResult
 from almost_any_file_to_pandas_spark.sources.rangescan import (
     file_groups,
+    object_frame,
     scan_specs,
 )
 
@@ -72,11 +76,9 @@ def table_grid(table: ET.Element) -> list[list[str]]:
 
 
 def _grid_df(spark: SparkSession, grid: list[list[str]]):
-    width = len(grid[0]) if grid else 0
-    schema = T.StructType(
-        [T.StructField(f"c{i}", T.StringType()) for i in range(width)]
-    )
-    return spark.createDataFrame([tuple(r) for r in grid], schema)
+    names = [f"c{i}" for i in range(len(grid[0]) if grid else 0)]
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    return spark.createDataFrame(object_frame(grid, names), schema)
 
 
 def _salvage_tables(
@@ -188,54 +190,31 @@ def read_spreadsheetml_many(spark: SparkSession, paths):
     DataFrame of ragged rows (source_file, sheet_name, row_idx,
     cells), parsed executor-side, one task per group of files.
 
-    The per-file parse is the same driver-side logic as
-    :func:`read_spreadsheetml`, relocated to executors: the driver
-    only ships path strings, so parallelism scales with file count —
+    The per-file parse is :func:`table_grid`, the grid builder of
+    :func:`read_spreadsheetml`, run on executors: the driver only ships
+    path strings, so parallelism scales with file count —
     the same corpus shape as ``read_excel_many``. Unparseable files
     contribute zero rows (log-and-continue, reference behavior).
     """
-    ns = SS_NS
 
     def _parse_files(group):
-        # Self-contained closure: everything (including the grid
-        # builder) is local so cloudpickle ships it by value — workers
-        # never import this package.
-        import pandas as pd
-        from xml.etree import ElementTree as _ET
-
-        def grid(tbl):
-            rows = []
-            for row in tbl.iter(f"{ns}Row"):
-                cells = [(d.text or "") for d in row.iter(f"{ns}Data")]
-                if cells:  # F1 empty-row skip
-                    rows.append(cells)
-            width = max((len(r) for r in rows), default=0)
-            return [r + [""] * (width - len(r)) for r in rows]
-
-        out = {"source_file": [], "sheet_name": [], "row_idx": [], "cells": []}
         for path in group:
             try:
-                root = _ET.parse(path).getroot()
+                root = ET.parse(path).getroot()
             except Exception:
                 continue
-            worksheets = list(root.iter(f"{ns}Worksheet"))
+            worksheets = list(root.iter(f"{SS_NS}Worksheet"))
             scoped = (
-                [(ws.get(f"{ns}Name") or "Not defined", t)
-                 for ws in worksheets for t in ws.iter(f"{ns}Table")]
+                [(ws.get(f"{SS_NS}Name") or "Not defined", t)
+                 for ws in worksheets for t in ws.iter(f"{SS_NS}Table")]
                 if worksheets
-                else [("Not defined", t) for t in root.iter(f"{ns}Table")]
+                else [("Not defined", t) for t in root.iter(f"{SS_NS}Table")]
             )
-            for sheet_name, tbl in scoped:
-                for idx, row in enumerate(grid(tbl)):
-                    out["source_file"].append(path)
-                    out["sheet_name"].append(sheet_name)
-                    out["row_idx"].append(idx)
-                    out["cells"].append(row)
-        # an all-empty dict-of-lists frame infers float64 columns,
-        # which Arrow cannot cast to list<string> — a task holding
-        # only unparseable files must yield nothing
-        if out["source_file"]:
-            yield pd.DataFrame(out)
+            yield [
+                (path, sheet_name, idx, row)
+                for sheet_name, tbl in scoped
+                for idx, row in enumerate(table_grid(tbl))
+            ]
 
     return scan_specs(
         spark,

@@ -353,7 +353,14 @@ def test_dbf_range_scan_has_no_exchange(spark, tmp_path):
     assert got == [i for i in range(500) if i not in (7, 250)]
 
 
-def test_corpus_readers_have_no_exchange(spark, tmp_path):
+def test_corpus_readers_have_no_exchange(spark, tmp_path, xlsx_file):
+    import shutil
+
+    from almost_any_file_to_pandas_spark.sources.avro import (
+        read_avro_many,
+        synth_avro,
+    )
+    from almost_any_file_to_pandas_spark.sources.excel import read_excel_many
     from almost_any_file_to_pandas_spark.sources.htmltab import read_html_many
     from almost_any_file_to_pandas_spark.sources.xmlss import (
         read_spreadsheetml_many,
@@ -373,11 +380,25 @@ def test_corpus_readers_have_no_exchange(spark, tmp_path):
     (tmp_path / "junk.xml").write_text("<not xml")
     (tmp_path / "junk.html").write_text("no tables")
 
+    avro_schema = {"type": "record", "name": "r", "fields": [{"name": "n", "type": "long"}]}
+    for i in range(3):
+        shutil.copy(xlsx_file, tmp_path / f"w{i}.xlsx")
+        (tmp_path / f"a{i}.avro").write_bytes(
+            synth_avro(avro_schema, [(10 * i + j,) for j in range(5)], rows_per_block=2)
+        )
+
     xml_df = read_spreadsheetml_many(spark, str(tmp_path / "*.xml"))
     html_df = read_html_many(spark, [str(p) for p in sorted(tmp_path.glob("*.html"))])
-    for df in (xml_df, html_df):
+    xlsx_df = read_excel_many(spark, str(tmp_path / "w*.xlsx"))
+    avro_df = read_avro_many(spark, str(tmp_path / "a*.avro"))
+    for df in (xml_df, html_df, xlsx_df, avro_df):
         plan = _executed_plan(df)
         assert "Exchange" not in plan and "Range" in plan, plan
+    assert xlsx_df.count() == 3 * 8  # 6-row + 2-row sheet per workbook
+    # contiguous block groups keep file and block order
+    assert [r.n for r in avro_df.collect()] == [
+        10 * i + j for i in range(3) for j in range(5)
+    ]
 
     def key(r):
         return (r[0].rsplit("/", 1)[-1], r[1], r[2], tuple(r[3]))
